@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run benchmark: every SparkEntry query timed against
@@ -318,42 +317,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // Shuffle files on tmpfs when available: bench data is tiny (≤ a few
-    // hundred MB of shuffle) but the host disk has multi-second latency
-    // spikes that otherwise leak into per-query wall times.
-    val shm = new java.io.File("/dev/shm")
-    val localDir =
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-bench")
-      else None
-    // r19: the r18 64 KB AQE coalescing floor is REVERTED to Spark's
-    // default 1 MB. r18 lowered minPartitionSize on subset evidence
-    // (sim_ivfpq/ev_sessionize-class CPU-dense reducers kept width),
-    // but the FULL-FLEET A/B this round (identical code, env-var-only
-    // flip, 3 interleaved passes × 250 queries, min per query) measured
-    // the 64 KB floor as a broad tax: total 213.8 s at 64k vs 180.6 s
-    // at 1m (geomean 0.844, only 4/250 queries >1.2× worse at 1m, and
-    // even most of r18's targeted winners ran faster at 1m —
-    // dd_lsh_sweep 0.68×, sim_mmr 0.69×). The tiny-task overhead the
-    // floor creates on every few-MB shuffle outweighs the width it buys
-    // the handful of CPU-dense stages. The knob stays parameterized
-    // (SPARK_GRAFT_MIN_SPLIT) for cluster profiles; the default is
-    // Spark's own.
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MIN_SPLIT", "1m")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        minPart)
-      .config("spark.ui.enabled", "false")
-    val spark = localDir.fold(builder)(d => builder.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietAllowlistedWarnings()
+    val spark = Sessions.get(shmDir = Some("graft-bench"))
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

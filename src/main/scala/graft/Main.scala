@@ -3,7 +3,6 @@ package graft
 import graft.pipeline._
 import graft.tfrecord.TFRecords
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** End-to-end pipeline composition — the Spark-native `build_pipeline`
@@ -164,17 +163,12 @@ object Main {
     }
   }
 
-  /** Fixture-derived file listing (same synthesis as queries.Reference:
-    * each document becomes `videos/<lang>/<source>/doc_<id>.<ext>`).
+  /** Fixture-derived file listing: [[queries.Reference.synthFiles]]
+    * (each document becomes `videos/<lang>/<source>/doc_<id>.<ext>`)
+    * without its doc_id.
     */
-  def fixtureListing(spark: SparkSession, sfDir: String): DataFrame = {
-    val exts = Seq("mp4", "mkv", "avi", "webm", "txt")
-    Tables(spark, sfDir, "documents").select(
-      concat(lit("videos/"), col("lang"), lit("/"), col("source"),
-        lit("/doc_"), col("doc_id"), lit("."),
-        element_at(array(exts.map(lit): _*),
-          (col("doc_id") % 5 + 1).cast("int"))).as("filename"))
-  }
+  def fixtureListing(spark: SparkSession, sfDir: String): DataFrame =
+    queries.Reference.synthFiles(spark, sfDir).select("filename")
 
   /** Flagship smoke: full pipeline over the sf listing into a temp dir,
     * returning the decoded samples (driver checks rows > 0).
@@ -191,28 +185,7 @@ object Main {
     val cli = parseArgs(args)
     val outDir = cli.outDir.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_out").toString)
-    // spark-submit parity (bin/run-pipeline.sh, the reference's
-    // run.preprocess.sh local/cloud split): a submitted run arrives with
-    // spark.master and its own shuffle sizing in the system properties —
-    // pinning local[*] here would silently hijack a cluster submission
-    // back onto the driver, so master/partitions are DEFAULTS, applied
-    // only when no submitter provided them.
-    val submitted = sys.props.contains("spark.master")
-    val builder0 = SparkSession.builder()
-    val builder =
-      if (submitted) builder0
-      else builder0
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        .config("spark.ui.enabled", "false") // local dev; keep UI on-cluster
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietAllowlistedWarnings()
+    val spark = Sessions.get()
     // --input_dir points at real files (distributed glob, the reference's
     // --input_dir); otherwise the fixture listing is synthesized from sfDir
     val (listing, decoder) = cli.inputDir match {

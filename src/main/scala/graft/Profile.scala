@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -51,22 +50,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("dd_lsh_sweep")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shm = new java.io.File("/dev/shm")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLIT", "1m"))
-      .config("spark.ui.enabled", "false")
-    val spark = (if (shm.isDirectory && shm.canWrite)
-      builder.config("spark.local.dir", "/dev/shm/graft-profile")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietAllowlistedWarnings()
+    val spark = Sessions.get(shmDir = Some("graft-profile"))
     val l = new L
     spark.sparkContext.addSparkListener(l)
 

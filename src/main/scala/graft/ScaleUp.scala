@@ -41,15 +41,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get()
     amplifyTo(spark, srcDir, outDir, factorS.toInt)
     spark.stop()
   }

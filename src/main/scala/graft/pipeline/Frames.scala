@@ -23,9 +23,9 @@ trait FrameDecoder extends Serializable {
       sampleRateMs: Long): Iterator[DecodedFrame]
 
   /** Metadata-only decode: same frames, `image` empty, pixel work
-    * skipped. The hook the column-pruning DataSource V2 path
-    * (sources.VideoFrameSource) pushes into — a real decoder reads
-    * container headers only. Default falls back to the full decode.
+    * skipped — a real decoder reads container headers only (timestamps,
+    * fps and frame totals for codecs it cannot decode to pixels). Default
+    * falls back to the full decode.
     */
   def decodeMeta(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] =

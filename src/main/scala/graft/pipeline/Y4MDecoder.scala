@@ -249,7 +249,7 @@ final class AutoFrameDecoder(
   private val mp4 = new Mp4FrameDecoder(fallback)
   private val mkv = new MkvFrameDecoder(fallback)
 
-  /** File-path decode (content == null, the DSv2 source's shape) sniffs
+  /** File-path decode (content == null, a filename-only caller) sniffs
     * the stream head FROM DISK — same magic rules as in-memory content,
     * so extensions lie harmlessly on both paths. The probe is a
     * readNBytes LOOP, not a single read(): a stream may legally return
@@ -270,7 +270,7 @@ final class AutoFrameDecoder(
       case e: Exception =>
         AutoFrameDecoder.probeFailures.increment()
         System.err.println(
-          s"[videoframes] head probe failed for $filename — " +
+          s"[frames] head probe failed for $filename — " +
             s"routing to fallback decoder: $e")
         Array.emptyByteArray
     }

@@ -24,8 +24,11 @@ object Reference {
 
   private val exts = Seq("mp4", "mkv", "avi", "webm", "txt")
 
-  /** Synthesized file listing with doc_id retained for frame synthesis. */
-  private def synthFiles(s: SparkSession, dir: String): DataFrame =
+  /** Synthesized file listing with doc_id retained for frame synthesis;
+    * also the listing `Main` runs the pipeline over when no real input is
+    * given ([[graft.Main.fixtureListing]]).
+    */
+  private[graft] def synthFiles(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents").select(
       concat(lit("videos/"), col("lang"), lit("/"), col("source"),
         lit("/doc_"), col("doc_id"), lit("."),

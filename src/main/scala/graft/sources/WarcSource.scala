@@ -29,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    ([[WarcSource.payloadBytesSkipped]], the TFRecord discipline);
   *  - **record-type + filename pushdown** — `warc_type = 'resource'`
   *    skips non-matching records before payload materialization, and
-  *    filename predicates prune the LISTING (the videoframes
-  *    discipline: filtered-out files never reach partition planning).
+  *    filename predicates prune the LISTING (filtered-out files never
+  *    reach partition planning).
   *
   * Partition planning: files round-robin into defaultParallelism input
   * partitions. At crawl scale one member-aligned file per partition is
@@ -77,37 +77,40 @@ object WarcSource {
   /** Test observability: payloads materialized in this JVM. */
   val payloadsMaterialized = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** warc_type-predicate compiler for pushed filters — same exactness
-    * rule as [[VideoFrameSource.filenamePredicate]]: compile only
-    * shapes that evaluate EXACTLY on the type string; everything else
-    * stays residual-only and simply doesn't prune.
+  /** String-predicate compiler for pushed filters on column `column`
+    * (`filename` prunes the listing, `warc_type` skips records ahead of
+    * payload materialization): Some(pred) only when `f` evaluates EXACTLY
+    * on that column's string. Exactness is the safety requirement, not a
+    * nicety — a wrongly excluded file or record can never be repaired by
+    * the residual Filter Spark re-applies, and under `Not` an
+    * over-inclusive approximation would flip into a wrong exclusion.
+    * Unknown shapes return None and simply don't prune; the TOP-LEVEL
+    * filter array is a conjunction, so the caller may prune with any
+    * exact subset of it.
     */
-  private[sources] def typePredicate(
+  private[sources] def stringPredicate(column: String)(
       f: org.apache.spark.sql.sources.Filter): Option[String => Boolean] = {
     import org.apache.spark.sql.sources._
+    val compile = stringPredicate(column) _
     f match {
-      case EqualTo("warc_type", v: String) => Some(_ == v)
-      case In("warc_type", vs) =>
+      case EqualTo(`column`, v: String) => Some(_ == v)
+      case In(`column`, vs) =>
         val set = vs.collect { case s: String => s }.toSet
         if (set.size == vs.length) Some(set) else None
-      case IsNotNull("warc_type") => Some(_ => true)
+      case StringStartsWith(`column`, p) => Some(_.startsWith(p))
+      case StringEndsWith(`column`, s) => Some(_.endsWith(s))
+      case StringContains(`column`, s) => Some(_.contains(s))
+      case IsNotNull(`column`) => Some(_ => true) // both columns non-null
       case And(l, r) =>
-        for (a <- typePredicate(l); b <- typePredicate(r))
+        for (a <- compile(l); b <- compile(r))
           yield (n: String) => a(n) && b(n)
       case Or(l, r) =>
-        for (a <- typePredicate(l); b <- typePredicate(r))
+        for (a <- compile(l); b <- compile(r))
           yield (n: String) => a(n) || b(n)
-      case Not(inner) => typePredicate(inner).map(p => (n: String) => !p(n))
+      case Not(inner) => compile(inner).map(p => (n: String) => !p(n))
       case _ => None
     }
   }
-
-  /** Filename predicates reuse the videoframes compiler verbatim (same
-    * column name, same exactness contract).
-    */
-  private[sources] def filenamePredicate(
-      f: org.apache.spark.sql.sources.Filter): Option[String => Boolean] =
-    VideoFrameSource.filenamePredicate(f)
 }
 
 final class WarcTable(properties: Map[String, String])
@@ -161,16 +164,17 @@ final class WarcScanBuilder(
       WarcSource.Schema.filter(f =>
         requiredSchema.fieldNames.contains(f.name)))
 
-  /** Everything is returned as residual (the videoframes rule): Spark
-    * re-applies row-level filters post-scan, so the pushdown can only
-    * skip work, never change results.
+  /** Everything is returned as residual: Spark re-applies row-level
+    * filters post-scan, so the pushdown can only skip work, never change
+    * results.
     */
   override def pushFilters(
       filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
-    val files = filters.flatMap(f =>
-      WarcSource.filenamePredicate(f).map(f -> _))
-    val types = filters.flatMap(f => WarcSource.typePredicate(f).map(f -> _))
+    def compiled(column: String) = filters.flatMap(f =>
+      WarcSource.stringPredicate(column)(f).map(f -> _))
+    val files = compiled("filename")
+    val types = compiled("warc_type")
     pushed = files.map(_._1) ++ types.map(_._1)
     val fp = files.map(_._2); val tp = types.map(_._2)
     keepFile = n => fp.forall(_(n))

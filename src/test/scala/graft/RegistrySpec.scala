@@ -19,6 +19,17 @@ class RegistrySpec extends AnyFunSuite {
     assert(names.size === SparkEntry.queries.size)
   }
 
+  test("every DataSourceRegister entry loads; tfrecord and warc resolve") {
+    // ServiceLoader fails the WHOLE iteration on one stale provider line,
+    // and Spark's format(...) lookup iterates it: a deleted source left in
+    // META-INF/services breaks every short name, not just its own
+    import scala.jdk.CollectionConverters._
+    val names = java.util.ServiceLoader
+      .load(classOf[org.apache.spark.sql.sources.DataSourceRegister])
+      .iterator().asScala.map(_.shortName()).toSet
+    assert(Set("tfrecord", "warc").subsetOf(names), names)
+  }
+
   test("every oracle belongs to a registered query, names well-formed") {
     val names = SparkEntry.all.map(_.name).toSet
     assert(SparkEntry.oracleSql.keySet.subsetOf(names))

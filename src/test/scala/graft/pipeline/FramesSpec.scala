@@ -81,4 +81,76 @@ class FramesSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("JavaCV"))
   }
+
+  // ---- the kept frame path end to end: Ingest.listFilesWithContent →
+  // Main.run's filter/label/split → Frames.extract through the
+  // content-magic router, bytes read through Hadoop ----------------------
+
+  private def framesOf(dir: String): Map[String, Seq[FrameRow]] = {
+    val files = Ingest.splitByHash(Ingest.withLabel(Ingest.filterVideos(
+      Ingest.listFilesWithContent(spark, dir))), 0.70, 0.15, 0.15)
+    Frames.extract(files, new AutoFrameDecoder(), 500L).collect().toSeq
+      .groupBy(_.filename.split('/').last)
+  }
+
+  private def put(dir: String, name: String, bytes: Array[Byte]): Unit =
+    java.nio.file.Files.write(java.nio.file.Path.of(dir, name), bytes)
+
+  test("listed files: one row per synthetic frame; non-video files filtered") {
+    val dir = java.nio.file.Files.createTempDirectory("frames_fake").toString
+    Seq("a.mp4", "b.mkv", "c.avi", "notes.txt", "d.webm").foreach(n =>
+      put(dir, n, s"fake-$n".getBytes))
+    val byFile = framesOf(dir)
+    assert(byFile.keySet === Set("a.mp4", "b.mkv", "c.avi"))
+    byFile.values.foreach { fs =>
+      // fake bytes fall back to the synthetic decoder: hash-derived count
+      val expected = 1 + java.lang.Math.floorMod(fs.head.filename.hashCode, 7)
+      assert(fs.length === expected, fs.head.filename)
+      assert(fs.forall(f => f.height === 8 && f.width === 8))
+    }
+  }
+
+  test("listed real y4m and MJPEG-AVI files REAL-decode through Frames.extract") {
+    val dir = java.nio.file.Files.createTempDirectory("frames_real").toString
+    // a real y4m (75%-red constant frame) under a LYING .mp4 extension,
+    // a real MJPEG-AVI (solid mid-gray), and a fake-content video name
+    val redFrame = {
+      val f = new Array[Byte](2 * 2 + 2 * 1)
+      java.util.Arrays.fill(f, 0, 4, 82.toByte)
+      f(4) = 90.toByte; f(5) = 240.toByte
+      f
+    }
+    put(dir, "red.mp4",
+      Y4MFrameDecoder.write(2, 2, 2, 1, "420mpeg2", Seq(redFrame)))
+    val gray = Array.fill(4 * 4 * 3)(0.5f)
+    put(dir, "gray.avi", AviMjpegFrameDecoder.write(4, 4, 2, 1,
+      Seq(AviMjpegFrameDecoder.encodeJpeg(gray, 4, 4))))
+    put(dir, "fake.mkv", "not a video".getBytes)
+    val byFile = framesOf(dir)
+    assert(byFile.keySet === Set("fake.mkv", "gray.avi", "red.mp4"))
+    // the real containers carry their REAL dimensions and pixels
+    val gray0 = byFile("gray.avi").head
+    assert(gray0.height === 4 && gray0.width === 4)
+    assert(math.abs(gray0.image(0) - 0.5f) < 3f / 255f) // JPEG round-trip
+    val red0 = byFile("red.mp4").head
+    assert(red0.height === 2 && red0.width === 2)
+    assert(red0.image(0) === 1.0f) // BT.601 75%-red clamps R to 1 (the golden)
+    // fake content falls back to the synthetic decoder's 8x8 shape
+    assert(byFile("fake.mkv").forall(f =>
+      f.height === 8 && f.image.length === 8 * 8 * 3))
+  }
+
+  test("a listed real ISO-BMFF mp4 under a lying .mkv name REAL-decodes") {
+    val dir = java.nio.file.Files.createTempDirectory("frames_mp4").toString
+    // a genuine MJPEG-in-mp4 (solid blue): routing is by ftyp magic
+    val blue = Array.tabulate(4 * 4 * 3)(i =>
+      if (i % 3 == 2) 0.9f else 0.05f)
+    put(dir, "blue.mkv", Mp4FrameDecoder.write(4, 4, 2, 1,
+      Seq(AviMjpegFrameDecoder.encodeJpeg(blue, 4, 4))))
+    val rows = framesOf(dir)("blue.mkv")
+    assert(rows.length === 1)
+    assert(rows.head.height === 4 && rows.head.width === 4)
+    assert(rows.head.image(0) < 0.15f) // dark red channel
+    assert(rows.head.image(2) > 0.8f) // bright blue channel — real pixels
+  }
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The `warc` DSv2 table: row fidelity against WarcIO, payload pruning
   * proven by the never-allocated counter, warc_type pushdown proven the
-  * same way, filename pushdown pruning the listing, and the pushed
-  * filters surfacing in the plan description (the videoframes evidence
-  * discipline).
+  * same way, filename pushdown pruning the listing, the pushed filters
+  * surfacing in the plan description, and the exactness rule of the
+  * predicate compiler behind both pushdowns.
   */
 class WarcSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -81,7 +81,7 @@ class WarcSourceSpec extends SparkSpec {
       "the two warcinfo payloads skip")
   }
 
-  test("filename pushdown prunes the LISTING (videoframes discipline)") {
+  test("filename pushdown prunes the LISTING before partition planning") {
     val dir = mkCorpus(4, 3)
     val df = spark.read.format("warc").load(dir)
       .filter(col("filename").endsWith("part-00002.warc.gz"))
@@ -115,5 +115,34 @@ class WarcSourceSpec extends SparkSpec {
     assert(got._1 === 20000L)
     assert(got._2 === 20000L)
     assert(got._3 > 0L)
+  }
+
+  test("stringPredicate compiles only exactly-evaluable shapes") {
+    import org.apache.spark.sql.sources._
+    def p(f: Filter) = WarcSource.stringPredicate("filename")(f)
+    def t(f: Filter) = WarcSource.stringPredicate("warc_type")(f)
+    assert(p(EqualTo("filename", "x")).exists(_("x")))
+    assert(p(Not(StringContains("filename", "a"))).exists(!_("abc")))
+    // Not over an unsupported operand must not compile (an over-
+    // inclusive approximation would flip into a wrong exclusion)
+    assert(p(Not(EqualTo("timestamp_ms", 0L))).isEmpty)
+    assert(p(And(StringStartsWith("filename", "/d"),
+      EqualTo("timestamp_ms", 0L))).isEmpty)
+    assert(p(Or(StringEndsWith("filename", ".mp4"),
+      StringEndsWith("filename", ".mkv"))).exists(_("x.mkv")))
+    assert(p(GreaterThan("timestamp_ms", 5L)).isEmpty)
+    // the same rule keyed by warc_type: the other column never compiles
+    assert(t(EqualTo("warc_type", "resource")).exists(_("resource")))
+    assert(t(In("warc_type", Array("resource", "response")))
+      .exists(f => f("response") && !f("warcinfo")))
+    assert(t(In("warc_type", Array("resource", 1))).isEmpty)
+    assert(t(IsNotNull("warc_type")).exists(_("warcinfo")))
+    assert(t(Not(EqualTo("warc_type", "warcinfo")))
+      .exists(f => f("resource") && !f("warcinfo")))
+    assert(t(EqualTo("filename", "resource")).isEmpty)
+    assert(t(Not(EqualTo("filename", "x"))).isEmpty)
+    assert(t(Or(EqualTo("warc_type", "resource"),
+      EqualTo("filename", "x"))).isEmpty)
+    assert(t(EqualTo("warc_type", 1)).isEmpty)
   }
 }
