@@ -123,8 +123,9 @@ object Main {
 
   /** files(filename) → TFRecords under `{outputDir}/data/{dataset=…}`.
     * `decoder` defaults to synthetic because the default listing is the
-    * fixture synthesis (no real bytes to decode); pass
-    * `FfmpegFrameDecoder.orSynthetic()` for real video input.
+    * fixture synthesis (no real bytes to decode); for real video input
+    * pass `new AutoFrameDecoder()`, as [[main]] does, which routes each
+    * file by its content magic.
     */
   def run(files: DataFrame, outputDir: String,
       cfg: Config = Config(),

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.io.ByteArrayInputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
 import javax.imageio.ImageIO
@@ -23,12 +22,10 @@ import javax.imageio.ImageIO
   * what makes a distributed per-file decode embarrassingly parallel).
   * All integers little-endian; chunks pad to even offsets.
   *
-  * Frame sampling mirrors [[Y4MFrameDecoder]] / the JavaCV grab loop:
-  * one tick per `sampleRateMs` of video time, each tick emitting the
-  * native frame whose interval covers it (fps = dwRate/dwScale). The
-  * metadata-only path ([[decodeMeta]], what the DSv2 column-pruned scan
-  * pushes into) walks the container index but never touches ImageIO —
-  * AviMjpegSpec counts decodes to prove it.
+  * Frames are sampled by [[FrameSampler]] on the constant-rate clock
+  * fps = dwRate/dwScale. The metadata-only path ([[decodeMeta]]) walks
+  * the container index but never touches ImageIO — AviMjpegSpec proves
+  * it on an AVI whose payloads are not JPEGs.
   */
 final class AviMjpegFrameDecoder extends FrameDecoder {
 
@@ -137,75 +134,15 @@ object AviMjpegFrameDecoder {
     Avi(w, h, num, den, frames.result())
   }
 
-  private def clamp01(v: Double): Float =
-    if (v <= 0) 0f else if (v >= 1) 1f else v.toFloat
-
-  /** One JPEG payload → interleaved normalized RGB floats via the JVM's
-    * own ImageIO JPEG reader (present in every JRE). The decoded
-    * dimensions must match the container header — a lying avih fails
-    * loudly rather than emitting misshapen tensors.
-    */
-  private def jpegToRgb(filename: String, b: Array[Byte], off: Int,
-      len: Int, w: Int, h: Int): Array[Float] = {
-    require(len >= 2 && (b(off) & 0xff) == 0xff && (b(off + 1) & 0xff) == 0xd8,
-      s"$filename: movi chunk at byte $off is not a JPEG (MJPG AVIs " +
-        "carry one complete JPEG per ##dc chunk)")
-    val img = ImageIO.read(new ByteArrayInputStream(b, off, len))
-    require(img != null, s"$filename: ImageIO failed to decode the JPEG " +
-      s"at byte $off")
-    require(img.getWidth == w && img.getHeight == h,
-      s"$filename: frame is ${img.getWidth}x${img.getHeight} but the AVI " +
-        s"header says ${w}x$h")
-    val px = new Array[Float](w * h * 3)
-    val row = new Array[Int](w)
-    var p = 0
-    var y = 0
-    while (y < h) {
-      img.getRGB(0, y, w, 1, row, 0, w)
-      var x = 0
-      while (x < w) {
-        val rgb = row(x)
-        px(p) = clamp01(((rgb >> 16) & 0xff) / 255.0)
-        px(p + 1) = clamp01(((rgb >> 8) & 0xff) / 255.0)
-        px(p + 2) = clamp01((rgb & 0xff) / 255.0)
-        p += 3
-        x += 1
-      }
-      y += 1
-    }
-    px
-  }
-
   private[pipeline] def decode(filename: String, content: Array[Byte],
       sampleRateMs: Long, withPixels: Boolean): Iterator[DecodedFrame] = {
-    val bytes =
-      if (content != null) content
-      else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        filename.stripPrefix("file:")))
+    val bytes = FrameSampler.bytes(filename, content)
     val avi = parse(filename, bytes)
-    val fps = FrameDecoder.effectiveFps(sampleRateMs)
-    val emitted = Iterator.from(0)
-      .map(i => (i.toLong * sampleRateMs,
-        i.toLong * sampleRateMs * avi.fpsNum / (1000L * avi.fpsDen)))
-      .takeWhile { case (_, idx) => idx < avi.frames.length }
-      .toArray
-    val total = emitted.length.toDouble
-    // adjacent ticks often land on the same native frame (sampleRateMs
-    // below the frame interval): decode each JPEG once, reuse the floats
-    var cachedIdx = -1L
-    var cached: Array[Float] = null
-    emitted.iterator.map { case (tsMs, idx) =>
-      val image =
-        if (!withPixels) Array.emptyFloatArray
-        else {
-          if (idx != cachedIdx) {
-            val (off, len) = avi.frames(idx.toInt)
-            cached = jpegToRgb(filename, bytes, off, len, avi.w, avi.h)
-            cachedIdx = idx
-          }
-          cached
-        }
-      DecodedFrame(tsMs, fps, total, avi.h, avi.w, image)
+    FrameSampler.sample(filename,
+      Timeline.uniform(filename, avi.frames.length, avi.fpsNum, avi.fpsDen),
+      avi.h, avi.w, sampleRateMs, withPixels) { i =>
+      val (off, len) = avi.frames(i)
+      FrameSampler.jpegToRgb(filename, "AVI", bytes, off, len, avi.w, avi.h)
     }
   }
 

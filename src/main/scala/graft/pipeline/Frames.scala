@@ -25,7 +25,9 @@ trait FrameDecoder extends Serializable {
   /** Metadata-only decode: same frames, `image` empty, pixel work
     * skipped — a real decoder reads container headers only (timestamps,
     * fps and frame totals for codecs it cannot decode to pixels). Default
-    * falls back to the full decode.
+    * falls back to the full decode. The pipeline itself calls only
+    * [[decode]]; the callers of this are the pipeline benchmark's `parse`
+    * layer and the decoder specs.
     */
   def decodeMeta(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] =
@@ -163,23 +165,8 @@ object FfmpegFrameDecoder {
         Option(grabImage.invoke(grabber)).map { frame =>
           val img = convert.invoke(converter, frame)
             .asInstanceOf[java.awt.image.BufferedImage]
-          val (h, w) = (img.getHeight, img.getWidth)
-          val px = new Array[Float](h * w * 3)
-          var p = 0
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              px(p) = ((rgb >> 16) & 0xff) / 255.0f
-              px(p + 1) = ((rgb >> 8) & 0xff) / 255.0f
-              px(p + 2) = (rgb & 0xff) / 255.0f
-              p += 3
-              x += 1
-            }
-            y += 1
-          }
-          DecodedFrame(tsMs, fps, n.toDouble, h, w, px)
+          DecodedFrame(tsMs, fps, n.toDouble, img.getHeight, img.getWidth,
+            FrameSampler.imageToRgb(img))
         }
       }
       frames.iterator

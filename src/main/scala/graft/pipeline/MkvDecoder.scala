@@ -388,7 +388,7 @@ object MkvFrameDecoder {
       frames += ((o, sz))
       // laced frames are DefaultDuration apart where the track declares
       // one; otherwise they share the block timestamp (non-decreasing,
-      // which is all the tick selector requires)
+      // which is all the sampler requires)
       starts += blockNs + i.toLong * track.defaultDurationNs
       o += sz
       i += 1
@@ -492,7 +492,7 @@ object MkvFrameDecoder {
     val th = track.getOrElse(throw new IllegalArgumentException(
       s"$filename: mkv has no video track"))
     val startArr = starts.result()
-    // the tick selector's binary search needs non-decreasing starts; a
+    // the sampler's binary search needs non-decreasing starts; a
     // cluster timestamp that rewinds must fail typed, not silently
     // select wrong frames (same discipline as the fragmented-mp4 tfdt)
     var si = 1
@@ -511,19 +511,6 @@ object MkvFrameDecoder {
         (if (th.defaultDurationNs > 0) th.defaultDurationNs else scaleNs)
     Track(th.w, th.h, th.codecId, th.colourSpace, th.num,
       th.defaultDurationNs, frames.result(), startArr, durationNs)
-  }
-
-  /** Frame index whose [start, next-start) covers `t` ns — binary
-    * search, same shape as the mp4 stts selector.
-    */
-  private def frameAt(starts: Array[Long], t: Long): Int = {
-    var lo = 0
-    var hi = starts.length - 1
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (starts(mid) <= t) lo = mid else hi = mid - 1
-    }
-    lo
   }
 
   /** One raw I420 frame → RGB floats, via the y4m converter (the frame
@@ -552,10 +539,7 @@ object MkvFrameDecoder {
   private[pipeline] def decode(filename: String, content: Array[Byte],
       sampleRateMs: Long, withPixels: Boolean,
       fallback: FrameDecoder): Iterator[DecodedFrame] = {
-    val bytes =
-      if (content != null) content
-      else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        filename.stripPrefix("file:")))
+    val bytes = FrameSampler.bytes(filename, content)
     require(sniff(bytes), s"$filename: not an EBML/Matroska stream")
     val track = parseVideoTrack(filename, bytes)
     // pure-JVM pixel paths: independent JPEGs (V_MJPEG) and raw planar
@@ -572,36 +556,13 @@ object MkvFrameDecoder {
       return fallback.decode(filename, content, sampleRateMs)
     }
     require(track.samples.nonEmpty, s"$filename: mkv video track is empty")
-    // totality: a mutated Duration/TimestampScale can claim days of
-    // video; the tick loop must fail typed, not spin (same bound as mp4)
-    require(track.durationNs / 1000000L / math.max(sampleRateMs, 1L)
-        <= 10000000L,
-      s"$filename: absurd mkv duration ${track.durationNs} ns")
-    val fps = FrameDecoder.effectiveFps(sampleRateMs)
-    val emitted = Iterator.from(0)
-      .map(i => i.toLong * sampleRateMs)
-      .takeWhile(_ * 1000000L < track.durationNs)
-      .map(tsMs => (tsMs, frameAt(track.starts, tsMs * 1000000L)))
-      .toArray
-    val total = emitted.length.toDouble
-    var cachedIdx = -1
-    var cached: Array[Float] = null
-    emitted.iterator.map { case (tsMs, idx) =>
-      val image =
-        if (!withPixels) Array.emptyFloatArray
-        else {
-          if (idx != cachedIdx) {
-            val (off, len) = track.samples(idx)
-            cached =
-              if (rawI420) i420ToRgb(filename, bytes, off, len,
-                track.w, track.h)
-              else Mp4FrameDecoder.jpegToRgb(filename, bytes, off, len,
-                track.w, track.h)
-            cachedIdx = idx
-          }
-          cached
-        }
-      DecodedFrame(tsMs, fps, total, track.h, track.w, image)
+    FrameSampler.sample(filename,
+      Timeline(1000000000L, track.starts, track.durationNs),
+      track.h, track.w, sampleRateMs, withPixels) { i =>
+      val (off, len) = track.samples(i)
+      if (rawI420) i420ToRgb(filename, bytes, off, len, track.w, track.h)
+      else FrameSampler.jpegToRgb(filename, "mkv", bytes, off, len,
+        track.w, track.h)
     }
   }
 

@@ -7,9 +7,6 @@ package graft.pipeline
   * the sink, keeping exact integer arithmetic everywhere else.
   */
 
-/** One listed input file after label extraction + split assignment. */
-final case class VideoFile(filename: String, label: String, dataset: String)
-
 /** One decoded frame before embedding (reference: preprocess.py:181-185). */
 final case class FrameRow(
     filename: String,

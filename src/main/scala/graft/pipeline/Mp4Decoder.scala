@@ -1,9 +1,6 @@
 package graft.pipeline
 
-import java.io.ByteArrayInputStream
 import java.nio.{ByteBuffer, ByteOrder}
-
-import javax.imageio.ImageIO
 
 /** Pure-JVM decoder for Motion-JPEG in an ISO-BMFF (`.mp4`) container —
   * the third rung of the offline realism ladder ([[Y4MFrameDecoder]]
@@ -45,11 +42,9 @@ import javax.imageio.ImageIO
   * reference's metadata columns (preprocess.py:181-185) need on the
   * H.264-led corpora real crawls consist of.
   *
-  * Frame sampling mirrors the other decoders: one tick per
-  * `sampleRateMs` of video time; each tick emits the sample whose
-  * [start, start+duration) interval covers it (binary search over the
-  * cumulative `stts` expansion — correct for variable frame durations,
-  * which MP4 allows and AVI does not).
+  * Frames are sampled by [[FrameSampler]] on the `mdhd` timescale over
+  * the cumulative `stts` expansion — correct for variable frame
+  * durations, which MP4 allows and AVI does not.
   */
 final class Mp4FrameDecoder(
     fallback: FrameDecoder = FfmpegFrameDecoder.orSynthetic())
@@ -326,7 +321,7 @@ object Mp4FrameDecoder {
       }
     }
     val startArr = starts.result()
-    // sampleAt's binary search assumes non-decreasing starts; a hostile
+    // the sampler's binary search assumes non-decreasing starts; a hostile
     // tfdt that rewinds the clock between fragments would otherwise make
     // frame selection silently return wrong samples — fail typed instead
     var si = 1
@@ -474,71 +469,10 @@ object Mp4FrameDecoder {
     Some(Track(w, h, codec, timescale, samples, startArr, clock))
   }
 
-  private def clamp01(v: Double): Float =
-    if (v <= 0) 0f else if (v >= 1) 1f else v.toFloat
-
-  // private[pipeline]: the Matroska decoder's V_MJPEG path shares the
-  // same guarded JPEG-sample decode (one independent JPEG per frame)
-  private[pipeline] def jpegToRgb(filename: String, b: Array[Byte], off: Long,
-      len: Int, w: Int, h: Int): Array[Float] = {
-    // totality: stco/co64/tfhd offsets are attacker-controlled file
-    // content — an offset past the buffer (or a value that would wrap
-    // the Int narrowing below) must fail typed like every other table
-    // guard, never surface as a raw ArrayIndexOutOfBounds from b(o).
-    // Subtraction form, NOT `off + len <= b.length`: a near-Long.Max
-    // offset would overflow the sum negative and sail through.
-    require(off >= 0 && len >= 0 && off <= b.length - len,
-      s"$filename: mp4 sample [$off, +$len) overruns the " +
-        s"${b.length}-byte file")
-    val o = off.toInt
-    require(len >= 2 && (b(o) & 0xff) == 0xff && (b(o + 1) & 0xff) == 0xd8,
-      s"$filename: mp4 sample at byte $off is not a JPEG")
-    val img = ImageIO.read(new ByteArrayInputStream(b, o, len))
-    require(img != null,
-      s"$filename: ImageIO failed to decode the JPEG at byte $off")
-    require(img.getWidth == w && img.getHeight == h,
-      s"$filename: frame is ${img.getWidth}x${img.getHeight} but the " +
-        s"stsd entry says ${w}x$h")
-    val px = new Array[Float](w * h * 3)
-    val row = new Array[Int](w)
-    var p = 0
-    var y = 0
-    while (y < h) {
-      img.getRGB(0, y, w, 1, row, 0, w)
-      var x = 0
-      while (x < w) {
-        val rgb = row(x)
-        px(p) = clamp01(((rgb >> 16) & 0xff) / 255.0)
-        px(p + 1) = clamp01(((rgb >> 8) & 0xff) / 255.0)
-        px(p + 2) = clamp01((rgb & 0xff) / 255.0)
-        p += 3
-        x += 1
-      }
-      y += 1
-    }
-    px
-  }
-
-  /** Sample index whose [start, next-start) interval covers `t`
-    * (timescale units) — binary search over the stts expansion.
-    */
-  private def sampleAt(starts: Array[Long], t: Long): Int = {
-    var lo = 0
-    var hi = starts.length - 1
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (starts(mid) <= t) lo = mid else hi = mid - 1
-    }
-    lo
-  }
-
   private[pipeline] def decode(filename: String, content: Array[Byte],
       sampleRateMs: Long, withPixels: Boolean,
       fallback: FrameDecoder): Iterator[DecodedFrame] = {
-    val bytes =
-      if (content != null) content
-      else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        filename.stripPrefix("file:")))
+    val bytes = FrameSampler.bytes(filename, content)
     require(sniff(bytes), s"$filename: not an ISO-BMFF stream")
     val track = parseVideoTrack(filename, bytes).getOrElse(
       throw new IllegalArgumentException(
@@ -554,37 +488,12 @@ object Mp4FrameDecoder {
       return fallback.decode(filename, content, sampleRateMs)
     }
     require(track.samples.nonEmpty, s"$filename: mp4 video track is empty")
-    // totality: a mutated stts delta can claim days of duration per
-    // sample; the tick loop must fail typed, not spin — 10M ticks at
-    // the default 500 ms is ~58 days of video, far past any real clip
-    require(track.durationUnits / math.max(track.timescale, 1L) * 1000L /
-        math.max(sampleRateMs, 1L) <= 10000000L,
-      s"$filename: absurd duration ${track.durationUnits} units at " +
-        s"timescale ${track.timescale}")
-    val fps = FrameDecoder.effectiveFps(sampleRateMs)
-    val emitted = Iterator.from(0)
-      .map { i =>
-        val tsMs = i.toLong * sampleRateMs
-        (tsMs, tsMs * track.timescale / 1000L)
-      }
-      .takeWhile { case (_, units) => units < track.durationUnits }
-      .map { case (tsMs, units) => (tsMs, sampleAt(track.starts, units)) }
-      .toArray
-    val total = emitted.length.toDouble
-    var cachedIdx = -1
-    var cached: Array[Float] = null
-    emitted.iterator.map { case (tsMs, idx) =>
-      val image =
-        if (!withPixels) Array.emptyFloatArray
-        else {
-          if (idx != cachedIdx) {
-            val (off, len) = track.samples(idx)
-            cached = jpegToRgb(filename, bytes, off, len, track.w, track.h)
-            cachedIdx = idx
-          }
-          cached
-        }
-      DecodedFrame(tsMs, fps, total, track.h, track.w, image)
+    FrameSampler.sample(filename,
+      Timeline(track.timescale, track.starts, track.durationUnits),
+      track.h, track.w, sampleRateMs, withPixels) { i =>
+      val (off, len) = track.samples(i)
+      FrameSampler.jpegToRgb(filename, "mp4", bytes, off, len, track.w,
+        track.h)
     }
   }
 
@@ -655,7 +564,7 @@ object Mp4FrameDecoder {
       be16(0x55c4) ++ be16(0)) // language 'und', pre_defined
     val hdlr = fullBox("hdlr", be32(0) ++
       "vide".getBytes("US-ASCII") ++ Array.fill(12)(0.toByte) ++
-      "graft ".getBytes("US-ASCII"))
+      "graft\u0000".getBytes("US-ASCII"))
     val vmhd = box("vmhd", Array[Byte](0, 0, 0, 1) ++ // v0, flags=1
       be16(0) ++ be16(0) ++ be16(0) ++ be16(0))
     val dref = fullBox("dref", be32(1) ++

@@ -251,35 +251,21 @@ object PngCodec {
   * (preprocess.py single_frame) generalized to real image bytes.
   * Pixel layout and normalization match the other real decoders
   * (interleaved RGB floats in [0,1]); the metadata path parses the IHDR
-  * only and never inflates the DEFLATE stream, so the DSv2 source's
-  * column pruning keeps paying on image corpora too.
+  * only and never inflates the DEFLATE stream.
   */
 final class PngFrameDecoder extends FrameDecoder {
 
-  private def bytesOf(filename: String, content: Array[Byte]): Array[Byte] =
-    if (content != null) content
-    else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      filename.stripPrefix("file:")))
-
   override def decode(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] = {
-    val (w, h, rgb) = PngCodec.decode(bytesOf(filename, content))
-    val px = new Array[Float](w * h * 3)
-    var i = 0
-    while (i < rgb.length) {
-      val v = rgb(i)
-      px(3 * i) = ((v >> 16) & 0xff) / 255.0f
-      px(3 * i + 1) = ((v >> 8) & 0xff) / 255.0f
-      px(3 * i + 2) = (v & 0xff) / 255.0f
-      i += 1
-    }
+    val (w, h, rgb) = PngCodec.decode(FrameSampler.bytes(filename, content))
     Iterator.single(DecodedFrame(0L,
-      FrameDecoder.effectiveFps(sampleRateMs), 1.0, h, w, px))
+      FrameDecoder.effectiveFps(sampleRateMs), 1.0, h, w,
+      FrameSampler.argbToRgb(rgb)))
   }
 
   override def decodeMeta(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] = {
-    val (w, h) = PngCodec.dimensions(bytesOf(filename, content))
+    val (w, h) = PngCodec.dimensions(FrameSampler.bytes(filename, content))
     Iterator.single(DecodedFrame(0L,
       FrameDecoder.effectiveFps(sampleRateMs), 1.0, h, w,
       Array.emptyFloatArray))

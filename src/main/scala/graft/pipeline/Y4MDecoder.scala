@@ -17,11 +17,8 @@ package graft.pipeline
   * only affect interpolating upsamplers; this decoder uses the co-sited
   * nearest sample), C420jpeg (full-range), C422, C444, and Cmono.
   *
-  * Frame sampling mirrors [[FfmpegFrameDecoder.grabFrames]]: one tick per
-  * `sampleRateMs` of video time, each tick emitting the frame whose
-  * native interval covers it; `frame_per_sec` is the emitted cadence
-  * ([[FrameDecoder.effectiveFps]]), `frame_total` the emitted count, as
-  * with [[SyntheticFrameDecoder]].
+  * Frames are sampled by [[FrameSampler]] on the constant-rate clock
+  * fps = num/den of the `F` tag.
   */
 final class Y4MFrameDecoder extends FrameDecoder {
 
@@ -175,27 +172,13 @@ object Y4MFrameDecoder {
 
   private[pipeline] def decode(filename: String, content: Array[Byte],
       sampleRateMs: Long, withPixels: Boolean): Iterator[DecodedFrame] = {
-    val bytes =
-      if (content != null) content
-      else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        filename.stripPrefix("file:")))
+    val bytes = FrameSampler.bytes(filename, content)
     val hdr = parseHeader(filename, bytes)
     val offsets = frameOffsets(filename, bytes, hdr)
-    val fps = FrameDecoder.effectiveFps(sampleRateMs)
-    // tick every sampleRateMs of video time; the covering native frame is
-    // floor(t · fpsNum / (1000 · fpsDen)); ticks past the last frame end
-    val emitted = Iterator.from(0)
-      .map(i => (i.toLong * sampleRateMs,
-        i.toLong * sampleRateMs * hdr.fpsNum / (1000L * hdr.fpsDen)))
-      .takeWhile { case (_, idx) => idx < offsets.length }
-      .toArray
-    val total = emitted.length.toDouble
-    emitted.iterator.map { case (tsMs, idx) =>
-      val image =
-        if (withPixels) toRgb(bytes, offsets(idx.toInt), hdr)
-        else Array.emptyFloatArray
-      DecodedFrame(tsMs, fps, total, hdr.h, hdr.w, image)
-    }
+    FrameSampler.sample(filename,
+      Timeline.uniform(filename, offsets.length, hdr.fpsNum, hdr.fpsDen),
+      hdr.h, hdr.w, sampleRateMs, withPixels)(i =>
+      toRgb(bytes, offsets(i), hdr))
   }
 
   /** Minimal y4m writer — the test-fixture companion (also handy for

@@ -57,7 +57,7 @@ object MultimodalQ {
     * the same 9×8 grid for exactly this reason, and a variable-length
     * sample (measured here first) scatters near-identical payloads to
     * hamming 22+. In production the (substr, ascii) projection is swapped
-    * for a real thumbnail decode (mapPartitions / the DSv2 frame source);
+    * for a real thumbnail decode (mapPartitions / `Frames.extract`);
     * everything downstream — banding, bucket join, hamming check — is
     * payload-agnostic and unchanged.
     */
@@ -504,7 +504,7 @@ object MultimodalQ {
     // [[SceneStride]] (the mm_dhash "resize" discipline — fixed-length
     // alignment is what keeps within-scene hamming small), ≤
     // [[SceneMaxFrames]] per asset; in production the crop projection
-    // swaps for the DSv2 frame source and NOTHING downstream changes.
+    // swaps for `Frames.extract` and NOTHING downstream changes.
     // Plan: one narrow frame explode (bounded ×MaxFrames), the hash in
     // the same codegen projection, one per-asset lag window, one
     // per-asset aggregate — no joins at all.

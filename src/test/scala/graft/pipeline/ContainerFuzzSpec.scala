@@ -72,6 +72,15 @@ class ContainerFuzzSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       dec.decode("evil.avi", evil, 500).foreach(_ => ()))
     assert(e.getMessage.contains("depth"))
+
+    // one frame per 4e9 s: the tick loop hits the 10M-tick bound and
+    // fails typed instead of filling the heap with ticks
+    val slow = AviMjpegFrameDecoder.write(4, 4, 1, 4000000000L,
+      Seq(jpeg, jpeg))
+    intercept[IllegalArgumentException](
+      dec.decode("slow.avi", slow, 500).foreach(_ => ()))
+    intercept[IllegalArgumentException](
+      dec.decodeMeta("slow.avi", slow, 500).foreach(_ => ()))
   }
 
   test("MKV: mutations and truncations are total, with the TIGHT bound " +
@@ -122,6 +131,15 @@ class ContainerFuzzSpec extends AnyFunSuite {
       Seq(frame, frame))
     val dec = new Y4MFrameDecoder()
     fuzz("y4m", good)(b => dec.decode("f.y4m", b, 500).foreach(_ => ()))
+
+    // F1:100000000000 claims 1e11 s per frame: typed failure at the
+    // 10M-tick bound, not an OutOfMemoryError from the tick loop
+    val slow = Y4MFrameDecoder.write(2, 2, 1, 100000000000L, "420mpeg2",
+      Seq(frame, frame))
+    intercept[IllegalArgumentException](
+      dec.decode("slow.y4m", slow, 500).foreach(_ => ()))
+    intercept[IllegalArgumentException](
+      dec.decodeMeta("slow.y4m", slow, 500).foreach(_ => ()))
   }
 
   test("PNG: mutations and truncations are total; a valid-CRC gigapixel " +
