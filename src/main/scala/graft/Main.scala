@@ -69,6 +69,12 @@ object Main {
       case other => throw new IllegalArgumentException(
         s"--mode must be one of single_frame|full_video|crop_video, got $other")
     }
+    // every numeric knob but --seed is a count, a rate or a length: zero or
+    // a negative value has no meaning, so it fails here, naming the flag,
+    // rather than inside an executor or as a silent fallback
+    def positive(flag: String, n: Long): Long =
+      if (n > 0) n
+      else throw new IllegalArgumentException(s"$flag must be positive, got $n")
     @annotation.tailrec
     def loop(rest: List[String], acc: CliArgs, nPos: Int): CliArgs =
       rest match {
@@ -87,19 +93,19 @@ object Main {
             case v :: t2 =>
               val next = key match {
                 case "mode" => acc.copy(cfg = acc.cfg.copy(mode = modeOf(v)))
-                case "batch_size" =>
-                  acc.copy(cfg = acc.cfg.copy(batchSize = v.toInt))
-                case "frame_sample_rate" =>
-                  acc.copy(cfg = acc.cfg.copy(sampleRateMs = v.toLong))
-                case "sequence_length" =>
-                  acc.copy(cfg = acc.cfg.copy(sequenceLengthMs = v.toLong))
-                case "period" =>
-                  acc.copy(cfg = acc.cfg.copy(periodMs = v.toLong))
-                case "num_shards" =>
-                  acc.copy(cfg = acc.cfg.copy(numShards = v.toInt))
+                case "batch_size" => acc.copy(cfg = acc.cfg.copy(
+                  batchSize = positive(flag, v.toInt).toInt))
+                case "frame_sample_rate" => acc.copy(cfg = acc.cfg.copy(
+                  sampleRateMs = positive(flag, v.toLong)))
+                case "sequence_length" => acc.copy(cfg = acc.cfg.copy(
+                  sequenceLengthMs = positive(flag, v.toLong)))
+                case "period" => acc.copy(cfg = acc.cfg.copy(
+                  periodMs = positive(flag, v.toLong)))
+                case "num_shards" => acc.copy(cfg = acc.cfg.copy(
+                  numShards = positive(flag, v.toInt).toInt))
                 case "seed" => acc.copy(cfg = acc.cfg.copy(seed = v.toLong))
-                case "embedding_dim" =>
-                  acc.copy(cfg = acc.cfg.copy(embeddingDim = v.toInt))
+                case "embedding_dim" => acc.copy(cfg = acc.cfg.copy(
+                  embeddingDim = positive(flag, v.toInt).toInt))
                 case "output_dir" => acc.copy(outDir = Some(v))
                 case "input_dir" => acc.copy(inputDir = Some(v))
                 case other => throw new IllegalArgumentException(

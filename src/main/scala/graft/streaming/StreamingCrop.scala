@@ -8,13 +8,16 @@ import org.apache.spark.sql.functions.{col, timestamp_millis}
   * §5 item 5): the reference's sliding event-time windows
   * (preprocess.py:327-344) over an unbounded frame stream.
   *
-  * Same lineage as the batch `Samples.cropVideo` — event-time from
-  * `timestamp_ms`, `window()` grouping, validity filter, collect_list,
-  * sort+pivot — plus a watermark, which is the only semantic addition
-  * streaming needs: it bounds state (old windows are evicted once the
-  * watermark passes) and, in append mode, decides when a window is final.
-  * On bounded input, batch ≡ streaming row-for-row (asserted by
-  * StreamingCropSpec).
+  * Event-time from `timestamp_ms`, `window()` grouping, the validity
+  * filter, collect_list, sort+pivot (`Samples.cropAssemble`), plus a
+  * watermark, which is the only semantic addition streaming needs: it
+  * bounds state (old windows are evicted once the watermark passes) and, in
+  * append mode, decides when a window is final. The batch
+  * `Samples.cropVideo` reaches the same samples another way (one group per
+  * video, then slicing), so the two are cross-checked: on bounded input,
+  * batch ≡ streaming row-for-row (StreamingCropSpec; StreamingPipelineSpec
+  * through both TFRecord sinks), and batch ≡ `cropAssemble` row-for-row
+  * over randomized frame sets (SamplesEquivalenceSpec).
   *
   * At scale this is the canonical shape: one shuffle on (window, filename),
   * state store per key, no global ordering anywhere.

@@ -134,5 +134,15 @@ class MainSpec extends SparkSpec {
     // Dataflow-only flags fail with a pointer, never silently ignore
     intercept[IllegalArgumentException](
       Main.parseArgs(Array("--project_id", "p")))
+    // counts, rates and lengths must be positive; the error names the flag
+    for (flag <- Seq("--frame_sample_rate", "--batch_size", "--num_shards",
+        "--sequence_length", "--period", "--embedding_dim")) {
+      assert(Main.parseArgs(Array(flag, "1")).cfg !== Main.Config())
+      for (v <- Seq("0", "-1")) {
+        val e = intercept[IllegalArgumentException](
+          Main.parseArgs(Array(flag, v)))
+        assert(e.getMessage.contains(flag), e.getMessage)
+      }
+    }
   }
 }
