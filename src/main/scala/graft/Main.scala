@@ -193,10 +193,11 @@ object Main {
     val outDir = cli.outDir.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_out").toString)
     val spark = Sessions.get()
-    // --input_dir points at real files (distributed glob, the reference's
-    // --input_dir); otherwise the fixture listing is synthesized from sfDir
+    // --input_dir points at real files (a glob, listed once on the driver
+    // as the reference's --input_dir is); otherwise the fixture listing is
+    // synthesized from sfDir
     val (listing, decoder) = cli.inputDir match {
-      // real files: distributed glob + the content-magic router. The
+      // real files: the glob listing + the content-magic router. The
       // pure-JVM decoders (y4m, MJPEG-AVI, MJPEG-mp4 incl. fragmented,
       // Matroska/WebM, PNG, codec-free mp4+mkv metadata) real-decode
       // what they recognize;

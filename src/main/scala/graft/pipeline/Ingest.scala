@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Metadata front-end of the pipeline — SURVEY.md §2 O1-O6.
@@ -13,13 +13,17 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  /** O1/O2 — file listing as a DataFrame. For cloud-scale input the listing
-    * itself must be distributed; `binaryFile` (or a custom DSv2 table) gives
-    * a lazy file index instead of the reference's eager driver-side glob
-    * (preprocess.py:377, the scalability cliff called out in SURVEY §3).
+  /** O1/O2 — file listing as a DataFrame: the reference's driver-side
+    * glob (preprocess.py:373-377), run once. `binaryFile`'s own `load`
+    * would glob on the driver and then list every matched file again, in
+    * a Spark job with one task per file once more than 32 paths match;
+    * [[org.apache.spark.sql.GraftBridge.binaryFiles]] keeps the glob's
+    * statuses instead, so listing starts no Spark job. Directories the
+    * glob matches are still listed by Spark, distributed when there are
+    * many.
     */
   def listFiles(spark: SparkSession, globPath: String): DataFrame =
-    spark.read.format("binaryFile").load(globPath)
+    GraftBridge.binaryFiles(spark, globPath)
       .select(col("path").as("filename"))
 
   /** [[listFiles]] keeping binaryFile's `content` column for a decode
@@ -31,7 +35,7 @@ object Ingest {
     * surviving file is read exactly once, at the decode flatMap.
     */
   def listFilesWithContent(spark: SparkSession, globPath: String): DataFrame =
-    spark.read.format("binaryFile").load(globPath)
+    GraftBridge.binaryFiles(spark, globPath)
       .select(col("path").as("filename"), col("content"))
 
   /** O2 variant for an in-memory list (beam.Create). */

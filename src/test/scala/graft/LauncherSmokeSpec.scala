@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * local) against a REAL mixed mp4 corpus — the r15 review found the
   * launcher had never been driven (it passed its input positionally,
   * binding it to the fixture dir), so the submitted-JVM path now has a
-  * standing proof: distributed binaryFile glob → content-magic routing
+  * standing proof: driver-side binaryFile glob → content-magic routing
   * (progressive MJPEG mp4, FRAGMENTED mp4, mp4 bytes under a lying
   * .avi extension, a .txt the extension filter must drop) → real
   * decode → TFRecord sink, all in a separate spark-submit JVM.

@@ -101,6 +101,33 @@ class MainSpec extends SparkSpec {
       .head().getLong(0) === 0L)
   }
 
+  test("single_frame over a 40-file real-media glob starts only the " +
+      "write's jobs") {
+    val root = Files.createTempDirectory("main_jobs")
+    def jpeg(v: Float) = AviMjpegFrameDecoder.encodeJpeg(
+      Array.fill(8 * 8 * 3)(v), 8, 8)
+    for (i <- 0 until 40) {
+      val frames = Seq(jpeg(i / 40f), jpeg(1 - i / 40f))
+      val (ext, bytes) = i % 3 match {
+        case 0 => ("avi", AviMjpegFrameDecoder.write(8, 8, 2, 1, frames))
+        case 1 => ("mp4", Mp4FrameDecoder.write(8, 8, 2, 1, frames))
+        case _ => ("mkv", MkvFrameDecoder.write(8, 8, 2, 1, frames))
+      }
+      val dir = Files.createDirectories(root.resolve(s"label${i % 4}/clips"))
+      Files.write(dir.resolve(f"v$i%02d.$ext"), bytes)
+    }
+    val out = Files.createTempDirectory("main_jobs_out").toString
+    val cfg = Main.Config(mode = Main.SingleFrame, embeddingDim = 8)
+    val (_, jobs) = JobCount.during(spark)(Main.run(
+      Ingest.listFilesWithContent(spark, s"$root/*/clips/*"), out, cfg,
+      new AutoFrameDecoder()))
+    // the listing adds none: a per-file listing job would make this 3
+    assert(jobs === 2)
+    // two 500 ms ticks per 1 s clip, one single_frame sample each
+    assert(TFRecords.read(spark, out, Main.sampleSchema(Main.SingleFrame))
+      .count() === 80)
+  }
+
   test("parseArgs covers the reference driver's local flag surface") {
     val cli = Main.parseArgs(Array(
       "--mode", "crop_video", "--batch_size", "8",

@@ -1,11 +1,198 @@
 package graft.pipeline
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import java.nio.file.{Files, Path}
+
+import graft.{JobCount, SparkSpec}
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, PathFilter,
+  RawLocalFileSystem, Path => HadoopPath}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.{col, sha2}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+/** An input path filter set through `mapreduce.input.pathFilter.class`
+  * (serializable: Spark's listing job ships it to its tasks).
+  */
+class NoSidecarsFilter extends PathFilter with Serializable {
+  override def accept(p: HadoopPath): Boolean = !p.getName.endsWith(".json")
+}
+
+/** The local file system under the `hosted` scheme, placing every file's
+  * one block on host `h1`: the local file system places them on
+  * `localhost`, which Spark's scan drops from a task's preferred hosts.
+  */
+class HostedLocalFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("hosted:///")
+  override def getFileBlockLocations(f: FileStatus, start: Long,
+      len: Long): Array[BlockLocation] =
+    Array(new BlockLocation(Array("h1:9866"), Array("h1"), 0, f.getLen))
+}
 
 class IngestSpec extends SparkSpec {
   import spark.implicits._
+
+  private def put(p: Path, text: String): Unit = {
+    Files.createDirectories(p.getParent)
+    Files.write(p, text.getBytes("UTF-8"))
+  }
+
+  /** `<root>/<label>/clips/c<i>.{avi,json}`: 48 files matched by a glob
+    * over every label's clips, more than Spark's 32-path threshold for a
+    * listing job, plus hidden names (`_x`, `.x`, an in-flight
+    * `._COPYING_`), two levels of nested directories under one clips dir,
+    * and a hidden label directory whose clips a glob still reaches.
+    */
+  private lazy val tree: Path = {
+    val root = Files.createTempDirectory("ingest_tree")
+    for (l <- 0 until 4; i <- 0 until 6) {
+      put(root.resolve(s"label$l/clips/c$i.avi"), s"clip $l $i")
+      put(root.resolve(s"label$l/clips/c$i.json"), s"""{"l": $l, "i": $i}""")
+    }
+    val c0 = root.resolve("label0/clips")
+    put(c0.resolve("_x.avi"), "hidden underscore")
+    put(c0.resolve(".x.avi"), "hidden dot")
+    put(c0.resolve("y.avi._COPYING_"), "in-flight copy")
+    put(c0.resolve("nested/n.avi"), "nested")
+    put(c0.resolve("nested/deeper/d.avi"), "nested deeper")
+    put(root.resolve("_label/clips/h.avi"), "under a hidden label")
+    root
+  }
+
+  /** Every column, with `content` as its SHA-256, sorted by path. */
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
+    df.select(df.columns.filterNot(_ == "content").map(col).toIndexedSeq :+
+        sha2(col("content"), 256): _*)
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+
+  /** Asserts the listing equals `binaryFile`'s `load` (schema and rows) and
+    * returns the listed file names.
+    */
+  private def assertSameAsLoad(path: String): Seq[String] = {
+    val ours = GraftBridge.binaryFiles(spark, path)
+    val load = spark.read.format("binaryFile").load(path)
+    assert(ours.schema === load.schema, path)
+    val rows = rowsOf(ours)
+    assert(rows === rowsOf(load), path)
+    rows.map(_.head.toString.split('/').last)
+  }
+
+  test("O1 listing ≡ binaryFile load: a >32-file glob across label dirs") {
+    val names = assertSameAsLoad(s"$tree/*/clips/*")
+    // 48 clips and sidecars, h.avi, and nested/n.avi: a matched directory
+    // contributes its own files, not those of its subdirectories (no
+    // recursiveFileLookup); hidden names drop whether matched or listed
+    assert(names.size === 50)
+    assert(names.count(_.endsWith(".json")) === 24)
+    assert(Set("n.avi", "h.avi").subsetOf(names.toSet))
+    assert(!names.contains("d.avi"))
+    assert(!names.exists(n => n.startsWith("_") || n.startsWith(".") ||
+      n.endsWith("._COPYING_")))
+  }
+
+  test("O1 listing ≡ binaryFile load: directory, file, extension and " +
+      "directory-matching globs") {
+    // plain directories (what FramesSpec passes), one with a nested subdir
+    assert(assertSameAsLoad(s"$tree/label1/clips").size === 12)
+    assert(assertSameAsLoad(s"$tree/label0/clips").size === 12)
+    assert(assertSameAsLoad(s"$tree/label0/clips/nested") === Seq("n.avi"))
+    // a single file, plain and qualified
+    assert(assertSameAsLoad(s"$tree/label1/clips/c0.avi") === Seq("c0.avi"))
+    assert(assertSameAsLoad(s"file://$tree/label2/clips/c1.json") ===
+      Seq("c1.json"))
+    // an extension glob: the nested directory no longer matches
+    assert(assertSameAsLoad(s"$tree/*/clips/*.avi").size === 25)
+    // globs that match only directories, with subdirectories below them
+    assert(assertSameAsLoad(s"$tree/*/clips").size === 49)
+    assert(assertSameAsLoad(s"$tree/label0/*").size === 12)
+    assert(assertSameAsLoad(s"$tree/*").isEmpty)
+  }
+
+  test("O1 listing ≡ binaryFile load: partition directories") {
+    val root = Files.createTempDirectory("ingest_parts")
+    put(root.resolve("year=2023/a.avi"), "a")
+    put(root.resolve("year=2024/b.avi"), "b")
+    put(root.resolve("year=2024/c.mkv"), "c")
+    assert(GraftBridge.binaryFiles(spark, root.toString).columns
+      .contains("year"))
+    assert(assertSameAsLoad(root.toString).size === 3)
+    assert(assertSameAsLoad(s"$root/*").size === 3)
+    assert(assertSameAsLoad(s"$root/*/*.avi").size === 2)
+  }
+
+  test("O1 a streaming sink's _spark_metadata log still governs its " +
+      "directory") {
+    val src = Files.createTempDirectory("ingest_stream_src")
+    val sink = Files.createTempDirectory("ingest_stream_sink")
+    val ckpt = Files.createTempDirectory("ingest_stream_ckpt")
+    put(src.resolve("lines.txt"), "a\nb\nc\n")
+    val q = spark.readStream.text(src.toString).writeStream.format("text")
+      .option("checkpointLocation", ckpt.toString).start(sink.toString)
+    try q.processAllAvailable() finally q.stop()
+    assert(Files.isDirectory(sink.resolve("_spark_metadata")))
+    // a file the sink's log does not name: the log, not the directory,
+    // says what the sink wrote
+    put(sink.resolve("stray.txt"), "not committed by the sink")
+    val logged = assertSameAsLoad(sink.toString)
+    assert(logged.nonEmpty && !logged.contains("stray.txt"))
+    // a glob is not a sink directory: it lists what it matches
+    val globbed = assertSameAsLoad(s"$sink/*")
+    assert(globbed.contains("stray.txt") &&
+      globbed.toSet.subsetOf(logged.toSet + "stray.txt"))
+  }
+
+  test("O1 listing ≡ binaryFile load under a configured input PathFilter") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("mapreduce.input.pathFilter.class",
+      classOf[NoSidecarsFilter].getName)
+    try {
+      val names = assertSameAsLoad(s"$tree/*/clips/*")
+      assert(names.size === 26 && !names.exists(_.endsWith(".json")))
+    } finally conf.unset("mapreduce.input.pathFilter.class")
+  }
+
+  test("O1 the scan packs the same tasks with the same preferred hosts") {
+    def tasks(df: DataFrame): Seq[Seq[String]] = {
+      val rdd = df.queryExecution.sparkPlan.collectFirst {
+        case s: FileSourceScanExec => s.inputRDD
+      }.get
+      rdd.partitions.toSeq.map(rdd.preferredLocations)
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.hosted.impl", classOf[HostedLocalFileSystem].getName)
+    try {
+      val glob = s"hosted://$tree/*/clips/*"
+      assert(assertSameAsLoad(glob).size === 50)
+      val ours = tasks(GraftBridge.binaryFiles(spark, glob))
+      assert(ours.size > 1 && ours.forall(_ === Seq("h1")))
+      assert(ours === tasks(spark.read.format("binaryFile").load(glob)))
+    } finally conf.unset("fs.hosted.impl")
+  }
+
+  test("O1 a path that matches nothing fails as load does: PATH_NOT_FOUND") {
+    for (path <- Seq(s"$tree/*/nothing/*", s"$tree/missing",
+        s"$tree/label0/clips/*.mp4")) {
+      val ours = intercept[AnalysisException](GraftBridge.binaryFiles(spark, path))
+      val load = intercept[AnalysisException](
+        spark.read.format("binaryFile").load(path))
+      assert(ours.getCondition === "PATH_NOT_FOUND", path)
+      assert(ours.getCondition === load.getCondition, path)
+      assert(ours.getMessage === load.getMessage, path)
+    }
+  }
+
+  test("O1 listing a >32-file glob starts no Spark job") {
+    val glob = s"$tree/*/clips/*"
+    val (listed, jobs) = JobCount.during(spark)(Ingest.listFiles(spark, glob))
+    assert(jobs === 0)
+    val (_, withContent) = JobCount.during(spark)(
+      Ingest.listFilesWithContent(spark, glob))
+    assert(withContent === 0)
+    // the counter sees binaryFile load's one-task-per-file listing job
+    val (_, loadJobs) = JobCount.during(spark)(
+      spark.read.format("binaryFile").load(glob))
+    assert(loadJobs >= 1)
+    assert(listed.count() === 50)
+  }
 
   test("O1/O2 file listing: binaryFile glob scan and in-memory create") {
     val dir = java.nio.file.Files.createTempDirectory("ingest_ls")
