@@ -32,8 +32,11 @@ Mechanics:
   trailing-window MEDIAN by >30% is quarantined until a second sample
   (a later run, or a probe-provenance sample) lands within 15% of it;
   until then the floor is the next non-quarantined sample. Quarantined
-  candidates are recorded in the baseline's "quarantined" audit section
-  (strings, written BEFORE "queries" so readBaseline never parses them).
+  candidates are recorded in the baseline's "quarantined" audit section.
+- Core-count guard: floors are only comparable at one core count. The
+  baseline records the run's "cpus" (Bench writes it into
+  bench_out.json), and a run measured on a different core count is
+  refused; a baseline that records none yet takes the first run's.
 - Subset guard: a run measuring < 90% of the window's max query count is
   refused (it would rotate a full run out of the window without
   replacing its coverage). Override with --subset-ok only for a
@@ -56,10 +59,10 @@ Mechanics:
   suspects in one window — but they count as the guard's confirming
   second sample, so the freshest evidence is visible to the next fold.
 
-The "repinned" section is written BEFORE "queries" and holds only string
-values: graft.Bench.readBaseline scans name:number pairs after the
-"queries" key, so metadata placed there (or numeric values) would leak
-into the parsed baseline.
+graft.Bench reads both files structurally (the baseline's "queries" and
+"cpus", the history's runs[*].queries), so key order is cosmetic: the
+audit sections come before "queries" and the probe samples before "runs"
+only to keep the files readable.
 
 Usage:
   fold_baseline.py [--bench bench_out.json] [--baseline bench_baseline.json]
@@ -81,12 +84,9 @@ def load(path):
 
 
 def dump_baseline(path, base):
-    # key order matters: source, repinned/quarantined (strings only),
-    # then queries last so readBaseline's scan-after-"queries" sees
-    # numbers only
+    # source, any other keys (cpus, hand-added notes), the audit
+    # sections, then the floors
     out = {"source": base.get("source", "")}
-    # preserve unknown keys, BEFORE "queries" (which must stay last for
-    # readBaseline's scan-after-"queries" numeric parse)
     for key, val in base.items():
         if key not in ("source", "repinned", "quarantined", "queries"):
             out[key] = val
@@ -101,14 +101,9 @@ def dump_baseline(path, base):
 
 
 def dump_history(path, hist):
-    # key order matters: probe_samples BEFORE runs — Bench.readHistory
-    # (trailing medians for the auto-probe) scans name:number pairs
-    # after the "runs" key, so probe samples placed there would leak
-    # into the medians they exist to cross-check
+    # k, any other keys (hand-added notes), the probe samples, then the
+    # runs
     out = {"k": hist["k"]}
-    # preserve any keys another tool (or a hand-added note) carries —
-    # BEFORE "runs", where Bench.readHistory's name:number scan never
-    # looks, so an unknown numeric map cannot leak into the medians
     for key, val in hist.items():
         if key not in ("k", "probe_samples", "runs"):
             out[key] = val
@@ -118,6 +113,17 @@ def dump_history(path, hist):
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
         f.write("\n")
+
+
+def check_cpus(base, bench, label):
+    """Refuse a run measured on another core count than the floors."""
+    want, got = base.get("cpus"), bench.get("cpus")
+    if want is None:
+        if got is not None:
+            base["cpus"] = got
+    elif got != want:
+        sys.exit(f"refusing to fold {label}: measured on {got} cpus, "
+                 f"the baseline's floors are {want}-cpu numbers")
 
 
 def _median(xs):
@@ -363,12 +369,14 @@ def main():
             print("probe sample(s) discarded (seed replaces the era)")
         for path in args.seed:
             bench = load(path)
+            check_cpus(base, bench, path)
             hist["runs"].append({"source": os.path.basename(path),
                                  "n": len(bench["queries"]),
                                  "queries": bench["queries"]})
         hist["runs"] = hist["runs"][-args.k:]
     else:
         bench = load(args.bench)
+        check_cpus(base, bench, args.bench)
         n = len(bench["queries"])
         surface = max((r["n"] for r in hist["runs"]), default=0)
         if hist["runs"] and n < 0.9 * surface and not args.subset_ok:

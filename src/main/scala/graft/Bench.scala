@@ -1,6 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{DecimalNode, JsonNodeFactory,
+  ObjectNode}
+
+import scala.jdk.CollectionConverters._
 
 /** Driver-run benchmark: every SparkEntry query timed against
   * SPARK_GRAFT_SF_DIR, one JSON line to stdout AND to bench_out.json
@@ -14,8 +20,48 @@ import java.nio.file.{Files, Paths}
   * becomes fiction. One untimed warmup pass amortizes JVM/codegen/classload
   * cost out of the first measured query. Failures are recorded per-query
   * and fail the process: a broken query must never bench as "fast".
+  *
+  * The first timed pass also counts each query's Spark work
+  * ([[Counters]]: jobs, stages, tasks, executor run/CPU time, shuffle,
+  * spill and input bytes) into bench_out.json's `counters`; a subset run
+  * (SPARK_GRAFT_ONLY) also prints each query's costliest stages to stderr.
+  * Counters do not drift with the host, so they answer structural
+  * questions (did a query gain a job or a shuffle?) that wall time cannot.
+  *
+  * Every artifact is read and written through Jackson's tree model.
   */
 object Bench {
+
+  private val Json = new ObjectMapper()
+  private val F = JsonNodeFactory.instance
+
+  private def obj(fields: (String, JsonNode)*): ObjectNode = {
+    val o = F.objectNode()
+    fields.foreach { case (k, v) => o.set[JsonNode](k, v) }
+    o
+  }
+
+  private def strings(xs: Iterable[String]): JsonNode = {
+    val a = F.arrayNode()
+    xs.foreach(a.add)
+    a
+  }
+
+  private def render(node: JsonNode): String = Json.writeValueAsString(node)
+
+  private def read(path: Path): Option[JsonNode] =
+    if (Files.exists(path)) Some(Json.readTree(path.toFile)) else None
+
+  /** The numeric members of a JSON object (none for any other node). */
+  private def numbers(node: JsonNode): Seq[(String, Double)] =
+    node.properties.asScala.toSeq.collect {
+      case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+    }
+
+  /** Suspect-list sentinel for the fleet-median warning — double
+    * underscores keep it outside every legal query name.
+    */
+  private[graft] val FleetSentinel = "__fleet_median__"
 
   /** bench_trend.json payload: each current per-query min against the best
     * prior recorded min (bench_baseline.json), so regressions self-report
@@ -42,11 +88,6 @@ object Bench {
     * is never washed out by benching a disjoint subset. Only a query
     * measured in BOTH runs can confirm as `regressed`.
     */
-  /** Suspect-list sentinel for the fleet-median warning — double
-    * underscores keep it outside every legal query name.
-    */
-  private[graft] val FleetSentinel = "__fleet_median__"
-
   private[graft] def trendJson(cur: Seq[(String, Double)],
       base: Map[String, Double], priorSuspects: Set[String] = Set.empty,
       sf: String = "", thresholdMilli: Long = 1500L,
@@ -55,12 +96,10 @@ object Bench {
       base.get(name) match {
         case Some(b) if b > 0 =>
           val milli = (min * 1000 / b).toLong
-          (name,
-            "\"" + name + "\":{\"min\":" + min + ",\"best_prior\":" + b +
-              ",\"ratio_milli\":" + milli + "}",
-            Some(milli))
-        case _ =>
-          (name, "\"" + name + "\":{\"min\":" + min + "}", None)
+          (name, obj("min" -> F.numberNode(min),
+            "best_prior" -> F.numberNode(b),
+            "ratio_milli" -> F.numberNode(milli)), Some(milli))
+        case _ => (name, obj("min" -> F.numberNode(min)), None)
       }
     }
     val measured = cur.map(_._1).toSet
@@ -79,7 +118,6 @@ object Bench {
     val flagging = flag(cur, base, thresholdMilli, fullSurface)
     val fullRun = flagging.fullRun
     val medianMilli = flagging.medianMilli
-    val effThreshold = flagging.effThreshold
     val suspectNames = flagging.suspects.map(_._1).sorted
     // The fleet-relative threshold's blind spot: a UNIFORM real
     // regression (a global config / Spark-version change slowing every
@@ -101,24 +139,21 @@ object Bench {
     // suspicion is exactly this run's verdict
     val persisted =
       (suspectNames ++ (priorSuspects - FleetSentinel -- measured)).sorted
-    val suspects = persisted.map("\"" + _ + "\"")
-    val regressed = suspectNames.filter(priorSuspects)
-      .map("\"" + _ + "\"")
     val improved = rows.collect {
       case (n, _, Some(m)) if m * thresholdMilli <= 1000L * 1000L =>
-        "\"" + n + "\"" // ratio ≤ 1/threshold, the symmetric win
+        n // ratio ≤ 1/threshold, the symmetric win
     }
-    val fresh = rows.collect { case (n, _, None) => "\"" + n + "\"" }
-    s"""{"threshold_milli":$thresholdMilli,"sf":"$sf",""" +
-      s""""median_ratio_milli":$medianMilli,""" +
-      s""""threshold_eff_milli":$effThreshold,""" +
-      s""""fleet_suspect":$fleetSuspect,""" +
-      s""""fleet_regressed":$fleetRegressed,""" +
-      s""""regressed":${regressed.mkString("[", ",", "]")},""" +
-      s""""suspects":${suspects.mkString("[", ",", "]")},""" +
-      s""""improved":${improved.mkString("[", ",", "]")},""" +
-      s""""new":${fresh.mkString("[", ",", "]")},""" +
-      s""""queries":${rows.map(_._2).mkString("{", ",", "}")}}"""
+    render(obj("threshold_milli" -> F.numberNode(thresholdMilli),
+      "sf" -> F.textNode(sf),
+      "median_ratio_milli" -> F.numberNode(medianMilli),
+      "threshold_eff_milli" -> F.numberNode(flagging.effThreshold),
+      "fleet_suspect" -> F.booleanNode(fleetSuspect),
+      "fleet_regressed" -> F.booleanNode(fleetRegressed),
+      "regressed" -> strings(suspectNames.filter(priorSuspects)),
+      "suspects" -> strings(persisted),
+      "improved" -> strings(improved),
+      "new" -> strings(rows.collect { case (n, _, None) => n }),
+      "queries" -> obj(rows.map { case (n, row, _) => n -> row }: _*)))
   }
 
   private[graft] def effectiveThreshold(thresholdMilli: Long,
@@ -159,7 +194,7 @@ object Bench {
       fullSurface: Boolean = true): Seq[(String, Long)] =
     flag(cur, base, thresholdMilli, fullSurface).suspects
 
-  /** The probe.sh adjudication rule as a pure function (spec-pinned):
+  /** The suspect adjudication rule as a pure function (spec-pinned):
     * the window's environment factor is the median control
     * ratio-to-floor; a suspect whose fresh re-measured ratio divided by
     * that factor still breaches 2.0× is CONFIRMed as code, anything
@@ -197,31 +232,27 @@ object Bench {
       val adj = raw / math.max(env, 1.0)
       val medRatio = trailingMedians.get(n).filter(_ > 0).map(fresh / _)
       val confirm = adj >= 2.0 && medRatio.forall(_ >= 1.5)
-      (n, fresh, floor, raw, adj, medRatio,
-        if (confirm) "CONFIRM" else "clear")
+      val row = obj("fresh_min" -> F.numberNode(fresh),
+        "floor" -> F.numberNode(floor),
+        "raw_milli" -> F.numberNode((raw * 1000).toLong),
+        "adj_milli" -> F.numberNode((adj * 1000).toLong))
+      medRatio.foreach(m => row.put("ratio_to_trailing_median_milli",
+        (m * 1000).toLong))
+      row.put("verdict", if (confirm) "CONFIRM" else "clear")
+      (n, row, confirm)
     }
-    val rows = judged.map {
-      case (n, fresh, floor, raw, adj, medRatio, verdict) =>
-        "\"" + n + "\":{\"fresh_min\":" + fresh + ",\"floor\":" + floor +
-          ",\"raw_milli\":" + (raw * 1000).toLong +
-          ",\"adj_milli\":" + (adj * 1000).toLong +
-          medRatio.fold("")(m =>
-            ",\"ratio_to_trailing_median_milli\":" + (m * 1000).toLong) +
-          ",\"verdict\":\"" + verdict + "\"}"
-    }
-    val confirmed = judged.count(_._7 == "CONFIRM")
-    val errs = probeErrors.map("\"" + _ + "\"").mkString("[", ",", "]")
     // a probe with failures cannot claim all-clear: the failed query's
     // verdict is UNKNOWN, not clear
     val verdict =
-      if (confirmed > 0) "CONFIRMED"
+      if (judged.exists(_._3)) "CONFIRMED"
       else if (probeErrors.nonEmpty) "probe-errors"
       else "all-clear"
-    s"""{"sf":"$sf","env_factor_milli":${(env * 1000).toLong},""" +
-      s""""n_controls":${controlRatios.size},""" +
-      s""""probe_errors":$errs,""" +
-      s""""verdict":"$verdict",""" +
-      s""""suspects":${rows.mkString("{", ",", "}")}}"""
+    render(obj("sf" -> F.textNode(sf),
+      "env_factor_milli" -> F.numberNode((env * 1000).toLong),
+      "n_controls" -> F.numberNode(controlRatios.size),
+      "probe_errors" -> strings(probeErrors),
+      "verdict" -> F.textNode(verdict),
+      "suspects" -> obj(judged.map { case (n, row, _) => n -> row }: _*)))
   }
 
   /** Previous run's suspect set from the bench_trend.json about to be
@@ -229,74 +260,40 @@ object Bench {
     * evidence only counts when the previous run recorded the SAME sf
     * (a dev subset run at another scale says nothing about this one);
     * a file with NO sf key — a legacy format, or hand-edited — is no
-    * evidence at all rather than evidence about every sf.
+    * evidence at all rather than evidence about every sf. The standing
+    * fleet-median verdict rides along as [[FleetSentinel]].
     */
-  private[graft] def readPriorSuspects(path: java.nio.file.Path,
-      sf: String): Set[String] =
-    if (!Files.exists(path)) Set.empty
-    else {
-      val text = Files.readString(path)
-      val sfRe = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-      val priorSf = sfRe.findFirstMatchIn(text).map(_.group(1))
-      if (!priorSf.contains(sf)) Set.empty
-      else {
-        val re = "\"suspects\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        val perQuery = re.findFirstMatchIn(text).map(m =>
-          // same [^"]* name shape the sf parse uses — any legal query
-          // name round-trips, none silently drop
-          "\"([^\"]*)\"".r.findAllMatchIn(m.group(1))
-            .map(_.group(1)).toSet).getOrElse(Set.empty[String])
-        // the standing fleet-median verdict rides along as a sentinel
-        // (double underscores keep it outside every legal query name)
-        if (text.contains("\"fleet_suspect\":true")) perQuery + FleetSentinel
+  private[graft] def readPriorSuspects(path: Path, sf: String): Set[String] =
+    read(path).filter(t => Option(t.get("sf")).exists(_.asText == sf))
+      .fold(Set.empty[String]) { t =>
+        val perQuery = t.path("suspects").asScala.map(_.asText).toSet
+        if (t.path("fleet_suspect").asBoolean) perQuery + FleetSentinel
         else perQuery
       }
-    }
 
-  /** bench_baseline.json → per-query best prior min. Hand-rolled parse of
-    * the known flat shape ("name":number pairs under "queries") — no JSON
-    * library on the unmanaged classpath.
+  /** bench_baseline.json → per-query best prior min (its `queries`). */
+  private[graft] def readBaseline(path: Path): Map[String, Double] =
+    read(path).fold(Map.empty[String, Double])(t =>
+      numbers(t.path("queries")).toMap)
+
+  /** The floors a run on `cpus` cores may be compared with: the
+    * baseline's, when it records the same `cpus`, else none. Floors set
+    * on 32 cores say nothing about a 4-core run, and a baseline that
+    * states no core count says nothing about any run.
     */
-  private[graft] def readBaseline(path: java.nio.file.Path): Map[String, Double] =
-    if (!Files.exists(path)) Map.empty
-    else {
-      val text = Files.readString(path)
-      val at = text.indexOf("\"queries\"")
-      if (at < 0) Map.empty // malformed baseline = no priors, not a crash
-      else {
-        val pair = "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
-        pair.findAllMatchIn(text.substring(at))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
+  private[graft] def floorsAt(path: Path, cpus: Int): Map[String, Double] =
+    if (read(path).exists(_.path("cpus").asInt(-1) == cpus)) readBaseline(path)
+    else Map.empty
 
   /** bench_history.json → per-query samples across the trailing window's
-    * FULL runs. Same hand-rolled parse discipline as [[readBaseline]]:
-    * scan name:number pairs, but only AFTER the "runs" key — the file
-    * may also carry probe-provenance samples (fold_baseline.py
-    * --fold-probe), which its writer places BEFORE "runs" precisely so
-    * a probe's one-window re-measurements never leak into the medians
-    * they exist to cross-check. Metadata keys riding in the scanned
-    * region (each run wrapper's "n" count; a hand-edited file could
-    * also place "k" after "runs") are excluded structurally: every
-    * query name is `family_name`-shaped, so only names containing an
-    * underscore are samples (spec-pinned against the live surface).
+    * FULL runs: `runs[*].queries` only, so the probe-provenance samples
+    * (fold_baseline.py --fold-probe) never leak into the medians they
+    * exist to cross-check, and no metadata key is read as a sample.
     */
-  private[graft] def readHistory(
-      path: java.nio.file.Path): Map[String, Seq[Double]] =
-    if (!Files.exists(path)) Map.empty
-    else {
-      val text = Files.readString(path)
-      val at = text.indexOf("\"runs\"")
-      if (at < 0) Map.empty
-      else {
-        val pair = "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
-        pair.findAllMatchIn(text.substring(at)).toSeq
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._1.contains('_'))
-          .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
-      }
-    }
+  private[graft] def readHistory(path: Path): Map[String, Seq[Double]] =
+    read(path).fold(Map.empty[String, Seq[Double]])(t =>
+      t.path("runs").asScala.toSeq.flatMap(r => numbers(r.path("queries")))
+        .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) })
 
   /** Sorted-midpoint median (even sizes interpolate) — ONE home, used
     * by both [[trailingMedians]] and main's volatility top-up.
@@ -311,13 +308,13 @@ object Bench {
     * cross-check [[adjudicationJson]] confirms against: a single freak
     * sample can move a min-folded floor but never the window median.
     */
-  private[graft] def trailingMedians(
-      path: java.nio.file.Path): Map[String, Double] =
+  private[graft] def trailingMedians(path: Path): Map[String, Double] =
     readHistory(path).map { case (n, xs) => n -> medianOf(xs) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.get(shmDir = Some("graft-bench"))
+    val cpus = spark.sparkContext.defaultParallelism
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -331,6 +328,7 @@ object Bench {
     val prefix = sys.env.getOrElse("SPARK_GRAFT_OUT_PREFIX", "")
     val outPath = Paths.get(s"${prefix}bench_out.json")
     val trendPath = Paths.get(s"${prefix}bench_trend.json")
+    val probePath = Paths.get(s"${prefix}probe_adjudication.json")
     // prior suspects feed the two-run regression confirmation — read
     // BEFORE the delete below discards the previous run's evidence
     val priorSuspects = readPriorSuspects(trendPath, sfDir)
@@ -339,7 +337,10 @@ object Bench {
     // adjudication verdict looking current)
     Files.deleteIfExists(outPath)
     Files.deleteIfExists(trendPath)
-    Files.deleteIfExists(Paths.get(s"${prefix}probe_adjudication.json"))
+    Files.deleteIfExists(probePath)
+    // floors measured on another core count are no evidence either way:
+    // every query is then `new`, and nothing is topped up or probed
+    val floors = floorsAt(Paths.get("bench_baseline.json"), cpus)
 
     // dev affordance: SPARK_GRAFT_ONLY=q1_agg,dd_jaccard benches a subset.
     // Full-surface status is decided HERE (the env var's absence), not
@@ -382,11 +383,14 @@ object Bench {
     // the min measures the engine, not the neighbor; the emitted
     // median/spread per query lets a reader tell a real regression (tight
     // spread, min moved) from noise (spread ≫ min). Failures still fail
-    // the run.
+    // the run. The first pass also counts each query's Spark work; the
+    // counters' fence job runs after `once` has stopped its clock.
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(3).max(1)
+    val counted = names.map(n => n -> Counters.during(spark)(once(n))).toMap
     val samples: Map[String, Seq[Double]] = {
-      val perPass = (1 to passes).map(_ => names.map(n => n -> once(n)).toMap)
+      val perPass = counted.map { case (n, (t, _)) => n -> t } +:
+        (2 to passes).map(_ => names.map(n => n -> once(n)).toMap)
       val base = names.map(n => n -> perPass.map(_(n)): (String, Seq[Double]))
         .toMap
       // Volatility top-up (r14 verdict task 1): sub-second CPU-tight
@@ -403,103 +407,97 @@ object Bench {
       // min sits ≥1.5× its trailing floor also qualifies even with a
       // tight spread — that's the "every sample this window landed
       // warm" shape the spread test can't see, and exactly what the
-      // driver's gate would flag.
-      val extraPasses = sys.env.get("SPARK_GRAFT_BENCH_EXTRA")
-        .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(2).max(0)
-      // floors are sf0.1 numbers: in an off-scale run (prefixed output,
-      // e.g. the sf1.0 scaling bench) EVERY query sits above them, and
-      // the floor arm would top-up the whole cheap fleet — compare only
-      // when this run feeds the same trend chain the floors came from
-      val floors =
-        if (prefix.isEmpty) readBaseline(Paths.get("bench_baseline.json"))
-        else Map.empty[String, Double]
+      // trend gate would flag. Floors are sf0.1 numbers: in an
+      // off-scale run (prefixed output, e.g. the sf1.0 scaling bench)
+      // EVERY query sits above them, so the floor arm only applies to
+      // the trend chain the floors came from.
+      val topUpFloors =
+        if (prefix.isEmpty) floors else Map.empty[String, Double]
       val volatile = names.filter { n =>
         val xs = base(n)
         !failed.contains(n) && xs.min < 1.2 &&
           ((xs.max - xs.min) > 0.5 * xs.min ||
-            floors.get(n).exists(f => f > 0 && xs.min >= 1.5 * f))
+            topUpFloors.get(n).exists(f => f > 0 && xs.min >= 1.5 * f))
       }
-      if (extraPasses == 0 || volatile.isEmpty) base
-      else {
-        val extra = (1 to extraPasses)
-          .map(_ => volatile.map(n => n -> once(n)).toMap)
-        base ++ volatile.map(n => n -> (base(n) ++ extra.map(_(n))))
-      }
+      val extra = (1 to 2).map(_ => volatile.map(n => n -> once(n)).toMap)
+      base ++ volatile.map(n => n -> (base(n) ++ extra.map(_(n))))
     }
     val results = names.map(n => n -> samples(n).min)
     val ok = results.filterNot { case (n, _) => failed.contains(n) }
-    val qs = ok.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    if (!fullSurface) ok.foreach { case (n, _) =>
+      val (t, c) = counted(n)
+      System.err.println(f"[bench] $n%s  first pass=$t%.3f s  " +
+        s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}\n${c.table}")
+    }
+    val total = ok.map(_._2).sum
     // per-query dispersion: min is what the driver grades; median and
     // spread (= max-min, the burst amplitude this run) make the gate
     // falsifiable — a regression is a moved min with a small spread.
-    val vars = ok.map { case (k, _) =>
-      val xs = samples(k)
-      "\"" + k + "\":{\"min\":" + xs.min + ",\"median\":" + medianOf(xs) +
-        ",\"spread\":" + (xs.max - xs.min) + "}"
-    }.mkString("{", ",", "}")
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = ok.map(_._2).sum
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""variance":$vars,"passes":$passes,""" +
-        s""""errors":$errs,"sf":"$sfDir"}"""
-    Files.writeString(outPath, json + "\n")
-    val baselineNow = readBaseline(Paths.get("bench_baseline.json"))
-    Files.writeString(trendPath,
-      trendJson(ok, baselineNow, priorSuspects, sfDir,
-        fullSurface = fullSurface) + "\n")
+    val json = obj("metric" -> F.textNode("total"),
+      "value" -> F.numberNode(total), "unit" -> F.textNode("sec"),
+      "queries" -> obj(ok.map { case (k, v) => k -> F.numberNode(v) }: _*),
+      "variance" -> obj(ok.map { case (k, _) =>
+        val xs = samples(k)
+        k -> obj("min" -> F.numberNode(xs.min),
+          "median" -> F.numberNode(medianOf(xs)),
+          "spread" -> F.numberNode(xs.max - xs.min))
+      }: _*),
+      "passes" -> F.numberNode(passes), "errors" -> strings(failed),
+      "sf" -> F.textNode(sfDir), "cpus" -> F.numberNode(cpus),
+      "counters" -> obj(ok.map { case (k, _) =>
+        k -> obj(counted(k)._2.fields.map { case (f, v) =>
+          f -> F.numberNode(v) }: _*)
+      }: _*))
+    Files.writeString(outPath, render(json) + "\n")
+    Files.writeString(trendPath, trendJson(ok, floors, priorSuspects, sfDir,
+      fullSurface = fullSurface) + "\n")
     // ---- suspect auto-adjudication (r15 verdict task 4) -------------------
-    // A full run that flags suspects used to leave adjudication to a
-    // by-hand probe.sh next session; the closing artifact then carried
-    // unexplained ≥2× flags. Now the run adjudicates itself: re-measure
-    // the flagged queries INTERLEAVED with stable controls in this same
-    // JVM (a fresh sample ~minutes after the main passes — a transient
-    // burst that inflated the main sample has usually moved on), divide
-    // out the window's environment factor (median control
-    // ratio-to-floor), and write the verdict beside the trend. Bounded:
-    // ≤8 worst suspects, 6 controls, 2 passes. Only for the real sf0.1
-    // chain (prefix empty) on a full surface; SPARK_GRAFT_PROBE=0 skips.
-    val probeOn = fullSurface && prefix.isEmpty && failed.isEmpty &&
-      !sys.env.get("SPARK_GRAFT_PROBE").contains("0")
-    if (probeOn) {
-      val fresh = freshSuspects(ok, baselineNow, fullSurface = fullSurface)
-      if (fresh.nonEmpty) {
-        val targets = fresh.take(8).map(_._1)
-        val targetSet = targets.toSet
-        val controls = stratifiedControls(baselineNow.toSeq
-          .filter { case (n, v) =>
-            !targetSet(n) && v >= 0.2 && v <= 1.0 &&
-              SparkEntry.queries.contains(n)
-          }
-          .map(_._1))
-        // a probe-time failure must never masquerade as a timing: a
-        // fast-throwing CONTROL would drag the env factor down (false
-        // CONFIRMs), a throwing TARGET would be timed at its
-        // time-to-throw (false clear). Failed queries drop out of the
-        // env estimate / verdict and are listed in the artifact.
-        var probeFailed = Set.empty[String]
-        def time(name: String): Double = {
-          val t0 = System.nanoTime()
-          try materialize(name)
-          catch { case _: Throwable => probeFailed += name }
-          (System.nanoTime() - t0) / 1e9
+    // The run adjudicates its own suspects: re-measure the flagged
+    // queries INTERLEAVED with stable controls in this same JVM (a fresh
+    // sample ~minutes after the main passes — a transient burst that
+    // inflated the main sample has usually moved on), divide out the
+    // window's environment factor (median control ratio-to-floor), and
+    // write the verdict beside the trend. Bounded: ≤8 worst suspects,
+    // 6 controls, 2 passes. Only for the real sf0.1 chain (prefix empty)
+    // on a full surface, against floors from the same core count.
+    val fresh =
+      if (fullSurface && prefix.isEmpty && failed.isEmpty)
+        freshSuspects(ok, floors, fullSurface = fullSurface)
+      else Nil
+    if (fresh.nonEmpty) {
+      val targets = fresh.take(8).map(_._1)
+      val targetSet = targets.toSet
+      val controls = stratifiedControls(floors.toSeq
+        .filter { case (n, v) =>
+          !targetSet(n) && v >= 0.2 && v <= 1.0 &&
+            SparkEntry.queries.contains(n)
         }
-        val order = targets ++ controls
-        val probeSamples = (1 to 2).map(_ => order.map(n => n -> time(n)))
-          .flatten.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).min }
-        val ctlRatios = controls.filterNot(probeFailed).flatMap(c =>
-          baselineNow.get(c).filter(_ > 0).map(f => probeSamples(c) / f))
-        val probeJson = adjudicationJson(
-          targets.filterNot(probeFailed)
-            .map(t => (t, probeSamples(t), baselineNow.getOrElse(t, 0.0))),
-          ctlRatios, sfDir,
-          probeErrors = probeFailed.toSeq.sorted,
-          trailingMedians = trailingMedians(Paths.get("bench_history.json")))
-        Files.writeString(Paths.get(s"${prefix}probe_adjudication.json"),
-          probeJson + "\n")
-        System.err.println(s"[bench] probe adjudication: $probeJson")
-      } else Files.deleteIfExists(Paths.get(s"${prefix}probe_adjudication.json"))
+        .map(_._1))
+      // a probe-time failure must never masquerade as a timing: a
+      // fast-throwing CONTROL would drag the env factor down (false
+      // CONFIRMs), a throwing TARGET would be timed at its
+      // time-to-throw (false clear). Failed queries drop out of the
+      // env estimate / verdict and are listed in the artifact.
+      var probeFailed = Set.empty[String]
+      def time(name: String): Double = {
+        val t0 = System.nanoTime()
+        try materialize(name)
+        catch { case _: Throwable => probeFailed += name }
+        (System.nanoTime() - t0) / 1e9
+      }
+      val order = targets ++ controls
+      val probeSamples = (1 to 2).map(_ => order.map(n => n -> time(n)))
+        .flatten.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).min }
+      val ctlRatios = controls.filterNot(probeFailed).flatMap(c =>
+        floors.get(c).filter(_ > 0).map(f => probeSamples(c) / f))
+      val probeJson = adjudicationJson(
+        targets.filterNot(probeFailed)
+          .map(t => (t, probeSamples(t), floors.getOrElse(t, 0.0))),
+        ctlRatios, sfDir,
+        probeErrors = probeFailed.toSeq.sorted,
+        trailingMedians = trailingMedians(Paths.get("bench_history.json")))
+      Files.writeString(probePath, probeJson + "\n")
+      System.err.println(s"[bench] probe adjudication: $probeJson")
     }
     // The driver captures only the TAIL (~2 KB) of stdout: the full
     // per-query line above is ~25 KB, so its head — and with it the
@@ -562,13 +560,16 @@ object Bench {
   private[graft] def compactLine(total: Double, ok: Seq[(String, Double)],
       failed: Seq[String], passes: Int, sfDir: String,
       detail: String = "bench_out.json"): String = {
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    // 3 decimals, trailing zeros kept ("1.000"), as a JSON number
+    def r3(v: Double): JsonNode = DecimalNode.valueOf(new java.math.BigDecimal(
+      "%.3f".formatLocal(java.util.Locale.ROOT, v)))
     val byName = ok.toMap
-    val head = Headline.filter(byName.contains)
-      .map(n => "\"" + n + "\":" + r3(byName(n))).mkString("{", ",", "}")
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""queries":$head,"n_queries":${ok.size},"passes":$passes,""" +
-      s""""errors":$errs,"detail":"$detail","sf":"$sfDir"}"""
+    render(obj("metric" -> F.textNode("total"), "value" -> r3(total),
+      "unit" -> F.textNode("sec"),
+      "queries" -> obj(Headline.filter(byName.contains)
+        .map(n => n -> r3(byName(n))): _*),
+      "n_queries" -> F.numberNode(ok.size), "passes" -> F.numberNode(passes),
+      "errors" -> strings(failed), "detail" -> F.textNode(detail),
+      "sf" -> F.textNode(sfDir)))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: every entrypoint (Main, Bench, Verify,
-  * Profile, Explain, ScaleUp) and the test suite build their session here,
+  * Explain, ScaleUp) and the test suite build their session here,
   * so the plans Explain prints and Verify checks are the plans Bench times.
   *
   * Fixed confs: UTC session time zone, legacy parquet nanos-as-long (the

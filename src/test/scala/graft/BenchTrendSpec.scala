@@ -241,9 +241,8 @@ class BenchTrendSpec extends AnyFunSuite {
 
   test("repinned and quarantined sections never pollute the parsed baseline") {
     // fold_baseline.py writes its audit sections (repinned, and since
-    // r17 quarantined) as STRING values BEFORE "queries"; the
-    // scan-after-"queries" parse must see only the real numbers (a
-    // numeric or post-queries audit entry would leak)
+    // r17 quarantined) as STRING values beside "queries"; the parse
+    // must see only the real numbers
     val p = Files.createTempFile("baseline_repin", ".json")
     Files.writeString(p,
       """{"source": "r17",
@@ -251,6 +250,33 @@ class BenchTrendSpec extends AnyFunSuite {
         | "quarantined": {"q_fast": "[0.05] quarantined (undercut window median 0.21 by >30% with no second sample within 15%); floor 0.2"},
         | "queries": {"q_slow": 0.6, "q_fast": 0.2}}""".stripMargin)
     assert(Bench.readBaseline(p) === Map("q_slow" -> 0.6, "q_fast" -> 0.2))
+  }
+
+  test("floors from another core count are no evidence: a 4-core run " +
+      "against the 32-core baseline flags nothing") {
+    val p = Files.createTempFile("baseline_cpus", ".json")
+    // a key after "queries" is read as a key, not as a query
+    Files.writeString(p,
+      """{"source": "r17", "queries": {"q_a": 1.0, "q_b": 1.0}, "cpus": 32}""")
+    assert(Bench.readBaseline(p) === Map("q_a" -> 1.0, "q_b" -> 1.0))
+    val cur = Seq("q_a" -> 5.0, "q_b" -> 0.1)
+    val at32 = Bench.trendJson(cur, Bench.floorsAt(p, 32))
+    assert(at32.contains(""""suspects":["q_a"]"""), at32)
+    assert(at32.contains(""""improved":["q_b"]"""), at32)
+    assert(Bench.floorsAt(p, 4) === Map.empty)
+    val at4 = Bench.trendJson(cur, Bench.floorsAt(p, 4))
+    assert(at4.contains(""""suspects":[]"""), at4)
+    assert(at4.contains(""""improved":[]"""), at4)
+    assert(at4.contains(""""new":["q_a","q_b"]"""), at4)
+    // nothing for the auto-probe to adjudicate either
+    assert(Bench.freshSuspects(cur, Bench.floorsAt(p, 4)).isEmpty)
+    // a baseline that states no core count matches none
+    val bare = Files.createTempFile("baseline_nocpus", ".json")
+    Files.writeString(bare, """{"queries": {"q_a": 1.0}}""")
+    assert(Bench.floorsAt(bare, 4) === Map.empty)
+    // the committed floors are 32-core numbers
+    assert(Bench.floorsAt(Paths.get("bench_baseline.json"), 32).size ===
+      Bench.readBaseline(Paths.get("bench_baseline.json")).size)
   }
 
   test("freshSuspects mirrors trendJson's flagging: fleet-median-" +

@@ -304,12 +304,47 @@ class FoldBaselineSpec extends AnyFunSuite {
     val hist = Files.readString(dir.resolve("bench_history.json"))
     assert(hist.contains("why this window was seeded"),
       s"fold dropped a hand-added history key: $hist")
-    // BEFORE "runs": anything after it is scanned as name:number samples
     assert(hist.indexOf("\"note\"") < hist.indexOf("\"runs\""), hist)
-    // trailing medians still parse only the runs (the note is upstream
-    // of the scan window, so it cannot pollute)
+    // trailing medians read only runs[*].queries, so the note cannot
+    // pollute them
     assert(Bench.trailingMedians(
       dir.resolve("bench_history.json"))("q_norm") == 0.5)
+  }
+
+  test("a run on another core count is refused; a baseline without " +
+      "one takes the run's") {
+    assume(havePython, "python3 not on PATH")
+    val dir = Files.createTempDirectory("fold_cpus")
+    seedHistory(dir, Seq(1.00, 1.02, 0.99, 0.98, 1.01))
+    write(dir, "bench_baseline.json",
+      """{"source": "r17", "cpus": 32, "queries": {"q_freak": 0.98}}""")
+    write(dir, "bench_out.json",
+      """{"cpus": 4, "queries": {"q_freak": 0.2, "q_norm": 0.1}}""")
+    val before = (Files.readString(dir.resolve("bench_baseline.json")),
+      Files.readString(dir.resolve("bench_history.json")))
+    val (rc, out) = fold(dir, "--source", "4-core run")
+    assert(rc != 0 && out.contains("refusing to fold"), out)
+    assert((Files.readString(dir.resolve("bench_baseline.json")),
+      Files.readString(dir.resolve("bench_history.json"))) === before)
+    // a legacy run that states no core count is refused too
+    write(dir, "bench_out.json", """{"queries": {"q_freak": 0.99}}""")
+    val (rcLegacy, outLegacy) = fold(dir, "--source", "legacy run")
+    assert(rcLegacy != 0 && outLegacy.contains("refusing to fold"), outLegacy)
+    // the same core count folds
+    write(dir, "bench_out.json",
+      """{"cpus": 32, "queries": {"q_freak": 0.99, "q_norm": 0.55}}""")
+    val (rc32, out32) = fold(dir, "--source", "32-core run")
+    assert(rc32 == 0, out32)
+    assert(Bench.floorsAt(dir.resolve("bench_baseline.json"), 32)("q_freak")
+      == 0.98)
+    // a baseline with no core count adopts the first run's
+    val fresh = Files.createTempDirectory("fold_cpus_fresh")
+    seedHistory(fresh, Seq(1.00, 1.02, 0.99))
+    write(fresh, "bench_out.json",
+      """{"cpus": 4, "queries": {"q_freak": 1.0, "q_norm": 0.5}}""")
+    val (rcFresh, outFresh) = fold(fresh, "--source", "first run")
+    assert(rcFresh == 0, outFresh)
+    assert(Bench.floorsAt(fresh.resolve("bench_baseline.json"), 4).nonEmpty)
   }
 
   test("small windows (<3 samples) admit the min: a new query's floor " +

@@ -118,11 +118,11 @@ class MainSpec extends SparkSpec {
     }
     val out = Files.createTempDirectory("main_jobs_out").toString
     val cfg = Main.Config(mode = Main.SingleFrame, embeddingDim = 8)
-    val (_, jobs) = JobCount.during(spark)(Main.run(
+    val (_, counts) = Counters.during(spark)(Main.run(
       Ingest.listFilesWithContent(spark, s"$root/*/clips/*"), out, cfg,
       new AutoFrameDecoder()))
     // the listing adds none: a per-file listing job would make this 3
-    assert(jobs === 2)
+    assert(counts.jobs === 2)
     // two 500 ms ticks per 1 s clip, one single_frame sample each
     assert(TFRecords.read(spark, out, Main.sampleSchema(Main.SingleFrame))
       .count() === 80)

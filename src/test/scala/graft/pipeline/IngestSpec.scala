@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 
-import graft.{JobCount, SparkSpec}
+import graft.{Counters, SparkSpec}
 import org.apache.hadoop.fs.{BlockLocation, FileStatus, PathFilter,
   RawLocalFileSystem, Path => HadoopPath}
 import org.apache.spark.sql.{AnalysisException, DataFrame, GraftBridge}
@@ -182,15 +182,15 @@ class IngestSpec extends SparkSpec {
 
   test("O1 listing a >32-file glob starts no Spark job") {
     val glob = s"$tree/*/clips/*"
-    val (listed, jobs) = JobCount.during(spark)(Ingest.listFiles(spark, glob))
-    assert(jobs === 0)
-    val (_, withContent) = JobCount.during(spark)(
+    val (listed, counts) = Counters.during(spark)(Ingest.listFiles(spark, glob))
+    assert(counts.jobs === 0)
+    val (_, withContent) = Counters.during(spark)(
       Ingest.listFilesWithContent(spark, glob))
-    assert(withContent === 0)
+    assert(withContent.jobs === 0)
     // the counter sees binaryFile load's one-task-per-file listing job
-    val (_, loadJobs) = JobCount.during(spark)(
+    val (_, load) = Counters.during(spark)(
       spark.read.format("binaryFile").load(glob))
-    assert(loadJobs >= 1)
+    assert(load.jobs >= 1)
     assert(listed.count() === 50)
   }
 
