@@ -33,10 +33,12 @@ Mechanics:
   (a later run, or a probe-provenance sample) lands within 15% of it;
   until then the floor is the next non-quarantined sample. Quarantined
   candidates are recorded in the baseline's "quarantined" audit section.
-- Core-count guard: floors are only comparable at one core count. The
-  baseline records the run's "cpus" (Bench writes it into
-  bench_out.json), and a run measured on a different core count is
-  refused; a baseline that records none yet takes the first run's.
+- Scale guard: floors are only comparable at one core count and one
+  scale factor. The baseline records the run's "cpus" and "sf" (the
+  basename of the "sf" fixture dir Bench writes into bench_out.json),
+  and a run measured on a different core count or sf, or one that
+  states none, is refused; a baseline that records none yet takes the
+  first run's.
 - Subset guard: a run measuring < 90% of the window's max query count is
   refused (it would rotate a full run out of the window without
   replacing its coverage). Override with --subset-ok only for a
@@ -59,10 +61,10 @@ Mechanics:
   suspects in one window — but they count as the guard's confirming
   second sample, so the freshest evidence is visible to the next fold.
 
-graft.Bench reads both files structurally (the baseline's "queries" and
-"cpus", the history's runs[*].queries), so key order is cosmetic: the
-audit sections come before "queries" and the probe samples before "runs"
-only to keep the files readable.
+graft.Bench reads both files structurally (the baseline's "queries",
+"cpus" and "sf", the history's runs[*].queries), so key order is
+cosmetic: the audit sections come before "queries" and the probe
+samples before "runs" only to keep the files readable.
 
 Usage:
   fold_baseline.py [--bench bench_out.json] [--baseline bench_baseline.json]
@@ -84,7 +86,7 @@ def load(path):
 
 
 def dump_baseline(path, base):
-    # source, any other keys (cpus, hand-added notes), the audit
+    # source, any other keys (cpus, sf, hand-added notes), the audit
     # sections, then the floors
     out = {"source": base.get("source", "")}
     for key, val in base.items():
@@ -115,15 +117,22 @@ def dump_history(path, hist):
         f.write("\n")
 
 
-def check_cpus(base, bench, label):
-    """Refuse a run measured on another core count than the floors."""
-    want, got = base.get("cpus"), bench.get("cpus")
-    if want is None:
-        if got is not None:
-            base["cpus"] = got
-    elif got != want:
-        sys.exit(f"refusing to fold {label}: measured on {got} cpus, "
-                 f"the baseline's floors are {want}-cpu numbers")
+def sf_name(sf_dir):
+    """The scale factor a run's "sf" names: its fixture dir's basename."""
+    return os.path.basename(sf_dir.rstrip("/")) if sf_dir else None
+
+
+def check_scale(base, bench, label):
+    """Refuse a run measured on another core count or sf than the floors."""
+    for key, got in (("cpus", bench.get("cpus")),
+                     ("sf", sf_name(bench.get("sf")))):
+        want = base.get(key)
+        if want is None:
+            if got is not None:
+                base[key] = got
+        elif got != want:
+            sys.exit(f"refusing to fold {label}: measured at {key}={got}, "
+                     f"the baseline's floors are {key}={want} numbers")
 
 
 def _median(xs):
@@ -369,14 +378,14 @@ def main():
             print("probe sample(s) discarded (seed replaces the era)")
         for path in args.seed:
             bench = load(path)
-            check_cpus(base, bench, path)
+            check_scale(base, bench, path)
             hist["runs"].append({"source": os.path.basename(path),
                                  "n": len(bench["queries"]),
                                  "queries": bench["queries"]})
         hist["runs"] = hist["runs"][-args.k:]
     else:
         bench = load(args.bench)
-        check_cpus(base, bench, args.bench)
+        check_scale(base, bench, args.bench)
         n = len(bench["queries"])
         surface = max((r["n"] for r in hist["runs"]), default=0)
         if hist["runs"] and n < 0.9 * surface and not args.subset_ok:

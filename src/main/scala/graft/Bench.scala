@@ -276,14 +276,21 @@ object Bench {
     read(path).fold(Map.empty[String, Double])(t =>
       numbers(t.path("queries")).toMap)
 
-  /** The floors a run on `cpus` cores may be compared with: the
-    * baseline's, when it records the same `cpus`, else none. Floors set
-    * on 32 cores say nothing about a 4-core run, and a baseline that
-    * states no core count says nothing about any run.
+  /** The floors a run on `cpus` cores over the fixtures in `sfDir` may
+    * be compared with: the baseline's, when it records the same `cpus`
+    * and an `sf` equal to `sfDir`'s last path segment, else none. Floors
+    * set on 32 cores say nothing about a 4-core run, floors set at sf0.1
+    * nothing about an sf0.01 run, and a baseline that states no core
+    * count or no sf says nothing about any run.
     */
-  private[graft] def floorsAt(path: Path, cpus: Int): Map[String, Double] =
-    if (read(path).exists(_.path("cpus").asInt(-1) == cpus)) readBaseline(path)
+  private[graft] def floorsAt(path: Path, cpus: Int,
+      sfDir: String): Map[String, Double] = {
+    val sf = Option(Paths.get(sfDir).getFileName).fold("")(_.toString)
+    if (sf.nonEmpty && read(path).exists(t =>
+        t.path("cpus").asInt(-1) == cpus && t.path("sf").asText("") == sf))
+      readBaseline(path)
     else Map.empty
+  }
 
   /** bench_history.json → per-query samples across the trailing window's
     * FULL runs: `runs[*].queries` only, so the probe-provenance samples
@@ -338,9 +345,9 @@ object Bench {
     Files.deleteIfExists(outPath)
     Files.deleteIfExists(trendPath)
     Files.deleteIfExists(probePath)
-    // floors measured on another core count are no evidence either way:
-    // every query is then `new`, and nothing is topped up or probed
-    val floors = floorsAt(Paths.get("bench_baseline.json"), cpus)
+    // floors measured on another core count or sf are no evidence either
+    // way: every query is then `new`, and nothing is topped up or probed
+    val floors = floorsAt(Paths.get("bench_baseline.json"), cpus, sfDir)
 
     // dev affordance: SPARK_GRAFT_ONLY=q1_agg,dd_jaccard benches a subset.
     // Full-surface status is decided HERE (the env var's absence), not

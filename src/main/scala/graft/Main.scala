@@ -199,16 +199,14 @@ object Main {
     val (listing, decoder) = cli.inputDir match {
       // real files: the glob listing + the content-magic router. The
       // pure-JVM decoders (y4m, MJPEG-AVI, MJPEG-mp4 incl. fragmented,
-      // Matroska/WebM, PNG, codec-free mp4+mkv metadata) real-decode
-      // what they recognize;
-      // only an unrecognized container / real codec reaches the
-      // env-gated FFmpeg-or-synthetic seam — previously the CLI
-      // bypassed the routers entirely and a JavaCV-less JVM silently
-      // fed SYNTHETIC frames for corpora the engine can actually
-      // decode (r15 fix). Bytes ride binaryFile's lazy `content` so
-      // executors read through Hadoop (hdfs:// and s3a:// work; no
-      // local-path assumption), and content never crosses a shuffle —
-      // the decode runs in the scan stage.
+      // Matroska/WebM, PNG) real-decode what they recognize; any other
+      // container or codec goes to the FFmpeg fallback, which without
+      // JavaCV fails the job with an IllegalArgumentException naming
+      // the file — no frame is ever made up for real input. Bytes ride
+      // binaryFile's lazy `content` so executors read through Hadoop
+      // (hdfs:// and s3a:// work; no local-path assumption), and
+      // content never crosses a shuffle — the decode runs in the scan
+      // stage.
       case Some(glob) =>
         (Ingest.listFilesWithContent(spark, glob),
           new AutoFrameDecoder(): FrameDecoder)

@@ -1,13 +1,12 @@
 package graft.pipeline
 
 /** REAL convolutional inference, pure JVM, provable offline — the
-  * geometry-aware step past [[LinearEmbedder]] (whose features are
-  * global channel statistics plus a sequence banding: real matmul, but
-  * blind to WHERE pixels sit). This runs an actual conv→ReLU→maxpool→
-  * dense→ReLU→dense forward pass over `.npy` weights, mirroring the
-  * reference's Inception-class embedding stage in structure and in its
-  * 2048-dim output (reference preprocess.py:206-215) at a size a test
-  * suite can hand-verify.
+  * geometry-aware model: global channel statistics are blind to WHERE
+  * pixels sit, a conv stem is not. This runs an actual conv→ReLU→
+  * maxpool→dense→ReLU→dense forward pass over `.npy` weights ([[Npy]]),
+  * mirroring the reference's Inception-class embedding stage in
+  * structure and in its 2048-dim output (reference preprocess.py:206-215)
+  * at a size a test suite can hand-verify.
   *
   * Network (all weights little-endian float32 `.npy` in `weightsDir`):
   *   - adaptive box-average pool of the H×W×3 input to a fixed
@@ -224,8 +223,8 @@ object ConvEmbedder {
     out
   }
 
-  /** Deterministic seeded weight set (the [[LinearEmbedder.writeWeights]]
-    * xorshift) written as `.npy` files — a reproducible conv "model" for
+  /** Deterministic seeded weight set (an xorshift over the seed)
+    * written as `.npy` files — a reproducible conv "model" for
     * tests and smoke deployments; swap the directory for trained weights
     * in production. Default dim 2048 mirrors the reference's embedding
     * width (preprocess.py:210).

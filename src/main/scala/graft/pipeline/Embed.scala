@@ -69,13 +69,12 @@ final class HashEmbedder(override val dim: Int = 2048) extends Embedder {
 }
 
 /** Production embedder over ONNX Runtime, bound reflectively so the
-  * library compiles and runs without the (absent offline) runtime jars.
-  * [[OnnxEmbedder.orHash]] is the deployment seam: a real model session
-  * when `ai.onnxruntime` is on the executor classpath, the deterministic
-  * [[HashEmbedder]] otherwise. Stands in for the reference's TF-Hub
-  * Inception-V3 predict_on_batch (preprocess.py:192-265); Embed.run's
-  * shape-keyed batching and per-JVM setup() singleton are the same either
-  * way.
+  * library compiles and runs without the (absent offline) runtime jars:
+  * without `ai.onnxruntime` on the executor classpath, [[setup]] fails
+  * with an actionable message instead of embedding anything. Stands in
+  * for the reference's TF-Hub Inception-V3 predict_on_batch
+  * (preprocess.py:192-265) through Embed.run's shape-keyed batching and
+  * per-JVM setup() singleton.
   *
   * `inputShape` is the per-image tensor shape the model expects (e.g.
   * 299,299,3); the batch dimension is prepended per call.
@@ -95,9 +94,8 @@ final class OnnxEmbedder(modelPath: String, inputShape: Seq[Int],
 
   override def setup(): Unit = {
     require(OnnxEmbedder.available,
-      "ONNX inference requested but ai.onnxruntime is not on the " +
-        "classpath — add the onnxruntime jar, or take the graceful seam " +
-        "OnnxEmbedder.orHash()")
+      s"ONNX inference of $modelPath requested but ai.onnxruntime is " +
+        "not on the classpath — add the onnxruntime jar")
     val envCls = Class.forName("ai.onnxruntime.OrtEnvironment")
     val sessCls = Class.forName("ai.onnxruntime.OrtSession")
     val tensorCls = Class.forName("ai.onnxruntime.OnnxTensor")
@@ -149,16 +147,6 @@ object OnnxEmbedder {
   lazy val available: Boolean =
     try { Class.forName("ai.onnxruntime.OrtEnvironment"); true }
     catch { case _: ClassNotFoundException | _: LinkageError => false }
-
-  /** The best embedder this JVM can offer — the load-if-present seam. */
-  def orHash(modelPath: String, inputShape: Seq[Int],
-      dim: Int = 2048): Embedder =
-    if (available) new OnnxEmbedder(modelPath, inputShape, dim)
-    else {
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn("onnxruntime not on classpath — using HashEmbedder")
-      new HashEmbedder(dim)
-    }
 }
 
 object Embed {

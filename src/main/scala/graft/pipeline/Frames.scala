@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** O7 — the frame-extraction UDTF (reference: preprocess.py:156-189).
   *
-  * The decode itself sits behind [[FrameDecoder]]: [[FfmpegFrameDecoder]]
-  * binds JavaCV reflectively (load-if-present — the offline container has
-  * no codec jars), and [[SyntheticFrameDecoder]] provides a deterministic
-  * fallback that exercises every downstream stage (batching, grouping,
-  * pivot, sink) with real Spark plumbing. The flatMap is the Spark-native
-  * shape of a 1→N generator: no shuffle, decode parallelism = input file
-  * partitioning.
+  * The decode itself sits behind [[FrameDecoder]]. Real files route by
+  * content magic through [[AutoFrameDecoder]] to the pure-JVM decoders;
+  * whatever none of them reads goes to [[FfmpegFrameDecoder]], which
+  * decodes through JavaCV when its jars are on the classpath and
+  * otherwise fails the file with a typed error. [[SyntheticFrameDecoder]]
+  * serves only listings with no bytes behind them (the fixture listing).
+  * The flatMap is the Spark-native shape of a 1→N generator: no shuffle,
+  * decode parallelism = input file partitioning.
   */
 trait FrameDecoder extends Serializable {
 
@@ -91,11 +92,10 @@ final class SyntheticFrameDecoder(height: Int = 8, width: Int = 8,
 
 /** Production video decoder over JavaCV's FFmpegFrameGrabber, bound
   * reflectively so the library compiles and runs without the (absent
-  * offline) codec jars. [[FfmpegFrameDecoder.orSynthetic]] is the
-  * deployment seam: real FFmpeg when `org.bytedeco.javacv` is on the
-  * executor classpath, the deterministic synthetic decoder otherwise. The
-  * Spark-side contract (schema, flatMap shape, partitioning) is identical
-  * either way, so swapping changes no plan.
+  * offline) codec jars. It is the routers' default fallback: without
+  * JavaCV on the executor classpath, a file no pure-JVM decoder reads
+  * fails with an `IllegalArgumentException` naming it, never with
+  * substitute frames.
   *
   * Mirrors the reference's decode loop (preprocess.py:156-189): open the
   * container, seek to each sampleRateMs-spaced timestamp, grab one image
@@ -105,9 +105,9 @@ final class FfmpegFrameDecoder extends FrameDecoder {
   override def decode(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] = {
     require(FfmpegFrameDecoder.available,
-      "FFmpeg decode requested but org.bytedeco.javacv is not on the " +
-        "classpath — add the JavaCV jars, or take the graceful seam " +
-        "FfmpegFrameDecoder.orSynthetic()")
+      s"cannot decode $filename: no pure-JVM decoder reads its container " +
+        "or codec, and FFmpeg decode needs org.bytedeco.javacv, which is " +
+        "not on the classpath — add the JavaCV jars")
     FfmpegFrameDecoder.grabFrames(filename, content, sampleRateMs)
   }
 }
@@ -119,18 +119,6 @@ object FfmpegFrameDecoder {
     try {
       Class.forName("org.bytedeco.javacv.FFmpegFrameGrabber"); true
     } catch { case _: ClassNotFoundException | _: LinkageError => false }
-
-  /** The best decoder this JVM can offer — the load-if-present seam.
-    * Logged once so a cluster silently missing the codec jars is visible
-    * in the driver log rather than only in the (synthetic) output.
-    */
-  def orSynthetic(): FrameDecoder =
-    if (available) new FfmpegFrameDecoder
-    else {
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn("JavaCV not on classpath — using SyntheticFrameDecoder")
-      new SyntheticFrameDecoder()
-    }
 
   /** Reflective decode loop; only reachable when [[available]]. Frames
     * are materialized before the grabber closes (the reference holds the

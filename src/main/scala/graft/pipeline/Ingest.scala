@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  /** O1/O2 — file listing as a DataFrame: the reference's driver-side
+  /** O1 — file listing as a DataFrame: the reference's driver-side
     * glob (preprocess.py:373-377), run once. `binaryFile`'s own `load`
     * would glob on the driver and then list every matched file again, in
     * a Spark job with one task per file once more than 32 paths match;
@@ -38,12 +38,6 @@ object Ingest {
     GraftBridge.binaryFiles(spark, globPath)
       .select(col("path").as("filename"), col("content"))
 
-  /** O2 variant for an in-memory list (beam.Create). */
-  def fromList(spark: SparkSession, files: Seq[String]): DataFrame = {
-    import spark.implicits._
-    files.toDF("filename")
-  }
-
   /** O4 — keep only supported video containers
     * (reference: preprocess.py:320-323, split on '.' + last element).
     */
@@ -65,29 +59,14 @@ object Ingest {
       when(size(segs) >= 3, element_at(segs, -3)))
   }
 
-  /** O6 — three-way train/val/test split.
-    *
-    * Two modes, both single-pass and shuffle-free:
-    *  - [[splitRandom]]: seeded `rand()`, faithful to the reference's
-    *    Bernoulli split (preprocess.py:36-70) but reproducible (the
-    *    reference's unseeded random.random() is a deliberate upgrade point,
-    *    SURVEY §7).
-    *  - [[splitByHash]]: md5-bucketed on the filename — fully deterministic
-    *    across engines and re-runs, the right choice at 100 TB where split
-    *    membership must survive recomputation of a lost partition.
-    *    (A rand() column is NOT recomputation-stable unless checkpointed.)
+  /** O6 — three-way train/val/test split, md5-bucketed on the filename:
+    * single-pass, shuffle-free and fully deterministic across engines
+    * and re-runs — the right choice at 100 TB, where split membership
+    * must survive recomputation of a lost partition (a `rand()` column
+    * is not recomputation-stable unless checkpointed). The reference's
+    * unseeded Bernoulli split (preprocess.py:36-70) gives the same
+    * ratios without that property (SURVEY §7).
     */
-  def splitRandom(files: DataFrame, train: Double, validation: Double,
-      test: Double, seed: Long): DataFrame = {
-    require(math.abs(train + validation + test - 1.0) < 1e-9,
-      s"ratios must sum to 1.0, got ${train + validation + test}")
-    val r = rand(seed)
-    files.withColumn("dataset",
-      when(r < test, "test")
-        .when(r < test + validation, "val")
-        .otherwise("train"))
-  }
-
   def splitByHash(files: DataFrame, train: Double, validation: Double,
       test: Double, keyCol: String = "filename"): DataFrame = {
     require(math.abs(train + validation + test - 1.0) < 1e-9,

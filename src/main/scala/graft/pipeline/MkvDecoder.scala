@@ -33,8 +33,9 @@ package graft.pipeline
   *
   * A real-codec track (`V_MPEG4/ISO/AVC`, `V_MPEGH/ISO/HEVC`,
   * `V_VP9`, …) is NOT silently mis-decoded: PIXELS take the same
-  * fallback the routing seam uses (JavaCV where present, deterministic
-  * synthetic where not). METADATA does not: cluster/block timestamps,
+  * fallback the routing seam uses, by default [[FfmpegFrameDecoder]]
+  * (JavaCV where present, a typed failure naming the file where not).
+  * METADATA does not: cluster/block timestamps,
   * DefaultDuration and the track's pixel dimensions yield timestamps,
   * fps and frame_total codec-free for ANY CodecID — what the
   * reference's metadata columns (preprocess.py:181-185) need on the
@@ -49,7 +50,7 @@ package graft.pipeline
   * a raw AIOOBE, a giant allocation, or silently wrong frames.
   */
 final class MkvFrameDecoder(
-    fallback: FrameDecoder = FfmpegFrameDecoder.orSynthetic())
+    fallback: FrameDecoder = new FfmpegFrameDecoder)
     extends FrameDecoder {
 
   override def decode(filename: String, content: Array[Byte],
@@ -550,7 +551,7 @@ object MkvFrameDecoder {
       track.colourSpace == "I420"
     if (withPixels && track.codecId != "V_MJPEG" && !rawI420) {
       // real codec (V_MPEG4/ISO/AVC, V_VP9, …): PIXELS need the
-      // env-gated seam — never mis-decode, never fabricate here.
+      // env-gated FFmpeg fallback — never mis-decode, never fabricate.
       // METADATA does not: the cluster/block timestamps already served
       // timestamps, fps and frame_total codec-free above.
       return fallback.decode(filename, content, sampleRateMs)

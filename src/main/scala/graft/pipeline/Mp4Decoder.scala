@@ -33,10 +33,10 @@ import java.nio.{ByteBuffer, ByteOrder}
   *
   * A real-codec mp4 (`avc1`/`hev1`/`vp09`/`mp4v` …) is NOT silently
   * mis-decoded: for PIXELS the constructor takes the same fallback the
-  * routing seam uses, so H.264 content still reaches JavaCV where
-  * present (and the deterministic synthetic decoder where not) — the
-  * documented env-gated boundary, now scoped to pixel decode of a
-  * non-JPEG codec and nothing else. METADATA (`decodeMeta`) is served
+  * routing seam uses, by default [[FfmpegFrameDecoder]], so H.264
+  * content reaches JavaCV where present and fails typed, naming the
+  * file, where not — the env-gated boundary, scoped to pixel decode of
+  * a non-JPEG codec and nothing else. METADATA (`decodeMeta`) is served
   * from the sample tables for ANY sample entry: stts/stsz/stco give
   * timestamps, fps and frame_total codec-free, which is what the
   * reference's metadata columns (preprocess.py:181-185) need on the
@@ -47,7 +47,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * durations, which MP4 allows and AVI does not.
   */
 final class Mp4FrameDecoder(
-    fallback: FrameDecoder = FfmpegFrameDecoder.orSynthetic())
+    fallback: FrameDecoder = new FfmpegFrameDecoder)
     extends FrameDecoder {
 
   override def decode(filename: String, content: Array[Byte],
@@ -478,8 +478,8 @@ object Mp4FrameDecoder {
       throw new IllegalArgumentException(
         s"$filename: mp4 has no video track"))
     if (withPixels && !JpegEntries.contains(track.codec.toLowerCase)) {
-      // real codec (avc1/hev1/…): PIXELS need the env-gated seam — never
-      // mis-decode, never silently fabricate here. METADATA does not:
+      // real codec (avc1/hev1/…): PIXELS need the env-gated FFmpeg
+      // fallback — never mis-decode, never fabricate here. METADATA does not:
       // the stbl tables (stts/stsz/stco) already yield timestamps, fps
       // and frame_total for ANY sample entry, codec-free — so the meta
       // path below serves avc1/hev1/vp09 corpora (what real crawls lead

@@ -197,29 +197,29 @@ object Y4MFrameDecoder {
   }
 }
 
-/** The deployment seam, one level up from
-  * [[FfmpegFrameDecoder.orSynthetic]]: dispatch per FILE by content
-  * magic, not by classpath alone — y4m streams (raw planar), MJPEG
-  * AVIs (compressed, decoded by the JVM's own JPEG reader), and PNGs
-  * (compressed stills as 1-frame videos, [[PngFrameDecoder]]) take the
-  * pure-JVM paths everywhere (extensions lie; ffmpeg also sniffs
-  * content), and everything else takes the best decoder this JVM
-  * offers (JavaCV when present, deterministic synthetic otherwise).
+/** Dispatch per FILE by content magic, not by extension: y4m streams
+  * (raw planar), MJPEG AVIs (compressed, decoded by the JVM's own JPEG
+  * reader), ISO-BMFF and Matroska containers, and PNGs (compressed
+  * stills as 1-frame videos, [[PngFrameDecoder]]) take the pure-JVM
+  * paths everywhere (extensions lie; ffmpeg also sniffs content).
+  * Everything else goes to `fallback`, by default
+  * [[FfmpegFrameDecoder]]: JavaCV when present, a typed failure naming
+  * the file otherwise.
   */
 object AutoFrameDecoder {
   /** Files whose on-disk head probe threw (per-JVM, test-visible): each
     * is logged to stderr and counted here before falling through to the
-    * fallback decoder, so a synthetic-pixel substitution can never
-    * happen without a trace. In-memory content and missing-file fixture
-    * paths that never open a stream successfully land here too — by
-    * design the fallback still owns the decode decision; this counter
-    * only guarantees observability.
+    * fallback decoder, so a misrouted file never goes without a trace.
+    * In-memory content and missing-file fixture paths that never open a
+    * stream successfully land here too — by design the fallback still
+    * owns the decode decision; this counter only guarantees
+    * observability.
     */
   val probeFailures = new java.util.concurrent.atomic.LongAdder
 }
 
 final class AutoFrameDecoder(
-    fallback: FrameDecoder = FfmpegFrameDecoder.orSynthetic())
+    fallback: FrameDecoder = new FfmpegFrameDecoder)
     extends FrameDecoder {
 
   private val y4m = new Y4MFrameDecoder
@@ -228,7 +228,7 @@ final class AutoFrameDecoder(
   // mp4 and mkv share the SAME fallback: an ISO-BMFF container routes
   // here on its ftyp magic (Matroska/WebM on the EBML magic), and a
   // non-JPEG codec inside then delegates codec-level, keeping the
-  // env-gated JavaCV/synthetic boundary at the narrowest possible seam
+  // env-gated JavaCV boundary at the narrowest possible seam
   private val mp4 = new Mp4FrameDecoder(fallback)
   private val mkv = new MkvFrameDecoder(fallback)
 
@@ -237,11 +237,9 @@ final class AutoFrameDecoder(
     * so extensions lie harmlessly on both paths. The probe is a
     * readNBytes LOOP, not a single read(): a stream may legally return
     * fewer than 16 bytes per read, and a short probe would misroute a
-    * real y4m/AVI to the fallback — which, without JavaCV, fabricates
-    * deterministic synthetic pixels, i.e. real corpus data silently
-    * replaced by fake frames. An unreadable path still falls through to
-    * the fallback (it owns the error/synthetic decision, as it always
-    * has) but is now logged and counted, never swallowed silently.
+    * real y4m/AVI to the fallback. An unreadable path still falls
+    * through to the fallback (it owns the decode decision) but is
+    * logged and counted, never swallowed silently.
     */
   private def headBytes(filename: String): Array[Byte] =
     try {

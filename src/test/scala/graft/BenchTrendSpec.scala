@@ -9,6 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchTrendSpec extends AnyFunSuite {
 
+  /** A fixture dir at the committed floors' scale factor. */
+  private val SfDir = "/data/sf0.1"
+
   test("trendJson classifies suspects, improvements, and new queries") {
     val cur = Seq(
       "q_reg" -> 3.0, // 3.0 / 1.0  = 3000‰ → suspect
@@ -257,26 +260,55 @@ class BenchTrendSpec extends AnyFunSuite {
     val p = Files.createTempFile("baseline_cpus", ".json")
     // a key after "queries" is read as a key, not as a query
     Files.writeString(p,
-      """{"source": "r17", "queries": {"q_a": 1.0, "q_b": 1.0}, "cpus": 32}""")
+      """{"source": "r17", "queries": {"q_a": 1.0, "q_b": 1.0}, "cpus": 32,
+        | "sf": "sf0.1"}""".stripMargin)
     assert(Bench.readBaseline(p) === Map("q_a" -> 1.0, "q_b" -> 1.0))
     val cur = Seq("q_a" -> 5.0, "q_b" -> 0.1)
-    val at32 = Bench.trendJson(cur, Bench.floorsAt(p, 32))
+    val at32 = Bench.trendJson(cur, Bench.floorsAt(p, 32, SfDir))
     assert(at32.contains(""""suspects":["q_a"]"""), at32)
     assert(at32.contains(""""improved":["q_b"]"""), at32)
-    assert(Bench.floorsAt(p, 4) === Map.empty)
-    val at4 = Bench.trendJson(cur, Bench.floorsAt(p, 4))
+    assert(Bench.floorsAt(p, 4, SfDir) === Map.empty)
+    val at4 = Bench.trendJson(cur, Bench.floorsAt(p, 4, SfDir))
     assert(at4.contains(""""suspects":[]"""), at4)
     assert(at4.contains(""""improved":[]"""), at4)
     assert(at4.contains(""""new":["q_a","q_b"]"""), at4)
     // nothing for the auto-probe to adjudicate either
-    assert(Bench.freshSuspects(cur, Bench.floorsAt(p, 4)).isEmpty)
+    assert(Bench.freshSuspects(cur, Bench.floorsAt(p, 4, SfDir)).isEmpty)
     // a baseline that states no core count matches none
     val bare = Files.createTempFile("baseline_nocpus", ".json")
     Files.writeString(bare, """{"queries": {"q_a": 1.0}}""")
-    assert(Bench.floorsAt(bare, 4) === Map.empty)
+    assert(Bench.floorsAt(bare, 4, SfDir) === Map.empty)
     // the committed floors are 32-core numbers
-    assert(Bench.floorsAt(Paths.get("bench_baseline.json"), 32).size ===
-      Bench.readBaseline(Paths.get("bench_baseline.json")).size)
+    assert(Bench.floorsAt(Paths.get("bench_baseline.json"), 32, SfDir)
+      .size === Bench.readBaseline(Paths.get("bench_baseline.json")).size)
+  }
+
+  test("floors from another scale factor are no evidence: an sf0.01 run " +
+      "against the sf0.1 baseline flags nothing") {
+    val p = Files.createTempFile("baseline_sf", ".json")
+    Files.writeString(p,
+      """{"cpus": 4, "sf": "sf0.1", "queries": {"q_a": 1.0, "q_b": 1.0}}""")
+    val cur = Seq("q_a" -> 5.0, "q_b" -> 0.1)
+    // the sf is the fixture dir's last segment, trailing slash or not
+    assert(Bench.floorsAt(p, 4, "/data/sf0.1/").size === 2)
+    assert(Bench.floorsAt(p, 4, "sf0.1").size === 2)
+    // another sf, or a look-alike dir, matches no floors
+    Seq("/data/sf0.01", "/data/sf0.1b", "/data/sf0.1/x", "").foreach { d =>
+      assert(Bench.floorsAt(p, 4, d) === Map.empty, d)
+    }
+    val at01 = Bench.trendJson(cur, Bench.floorsAt(p, 4, "/data/sf0.01"))
+    assert(at01.contains(""""suspects":[]"""), at01)
+    assert(at01.contains(""""improved":[]"""), at01)
+    assert(at01.contains(""""new":["q_a","q_b"]"""), at01)
+    assert(Bench.freshSuspects(cur,
+      Bench.floorsAt(p, 4, "/data/sf0.01")).isEmpty)
+    // a baseline that states no sf matches no run, at any core count
+    val nosf = Files.createTempFile("baseline_nosf", ".json")
+    Files.writeString(nosf, """{"cpus": 4, "queries": {"q_a": 1.0}}""")
+    assert(Bench.floorsAt(nosf, 4, "/data/sf0.1") === Map.empty)
+    // the committed floors are sf0.1 numbers
+    assert(Bench.floorsAt(Paths.get("bench_baseline.json"), 32,
+      "/data/sf0.01") === Map.empty)
   }
 
   test("freshSuspects mirrors trendJson's flagging: fleet-median-" +

@@ -317,9 +317,11 @@ class FoldBaselineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("fold_cpus")
     seedHistory(dir, Seq(1.00, 1.02, 0.99, 0.98, 1.01))
     write(dir, "bench_baseline.json",
-      """{"source": "r17", "cpus": 32, "queries": {"q_freak": 0.98}}""")
+      """{"source": "r17", "cpus": 32, "sf": "sf0.1",
+        | "queries": {"q_freak": 0.98}}""".stripMargin)
     write(dir, "bench_out.json",
-      """{"cpus": 4, "queries": {"q_freak": 0.2, "q_norm": 0.1}}""")
+      """{"sf": "/data/sf0.1", "cpus": 4,
+        | "queries": {"q_freak": 0.2, "q_norm": 0.1}}""".stripMargin)
     val before = (Files.readString(dir.resolve("bench_baseline.json")),
       Files.readString(dir.resolve("bench_history.json")))
     val (rc, out) = fold(dir, "--source", "4-core run")
@@ -327,24 +329,75 @@ class FoldBaselineSpec extends AnyFunSuite {
     assert((Files.readString(dir.resolve("bench_baseline.json")),
       Files.readString(dir.resolve("bench_history.json"))) === before)
     // a legacy run that states no core count is refused too
-    write(dir, "bench_out.json", """{"queries": {"q_freak": 0.99}}""")
+    write(dir, "bench_out.json",
+      """{"sf": "/data/sf0.1", "queries": {"q_freak": 0.99}}""")
     val (rcLegacy, outLegacy) = fold(dir, "--source", "legacy run")
     assert(rcLegacy != 0 && outLegacy.contains("refusing to fold"), outLegacy)
     // the same core count folds
     write(dir, "bench_out.json",
-      """{"cpus": 32, "queries": {"q_freak": 0.99, "q_norm": 0.55}}""")
+      """{"sf": "/data/sf0.1", "cpus": 32,
+        | "queries": {"q_freak": 0.99, "q_norm": 0.55}}""".stripMargin)
     val (rc32, out32) = fold(dir, "--source", "32-core run")
     assert(rc32 == 0, out32)
-    assert(Bench.floorsAt(dir.resolve("bench_baseline.json"), 32)("q_freak")
-      == 0.98)
+    assert(Bench.floorsAt(dir.resolve("bench_baseline.json"), 32,
+      "/data/sf0.1")("q_freak") == 0.98)
     // a baseline with no core count adopts the first run's
     val fresh = Files.createTempDirectory("fold_cpus_fresh")
     seedHistory(fresh, Seq(1.00, 1.02, 0.99))
     write(fresh, "bench_out.json",
-      """{"cpus": 4, "queries": {"q_freak": 1.0, "q_norm": 0.5}}""")
+      """{"sf": "/data/sf0.1", "cpus": 4,
+        | "queries": {"q_freak": 1.0, "q_norm": 0.5}}""".stripMargin)
     val (rcFresh, outFresh) = fold(fresh, "--source", "first run")
     assert(rcFresh == 0, outFresh)
-    assert(Bench.floorsAt(fresh.resolve("bench_baseline.json"), 4).nonEmpty)
+    assert(Bench.floorsAt(fresh.resolve("bench_baseline.json"), 4,
+      "/data/sf0.1").nonEmpty)
+  }
+
+  test("a run at another scale factor is refused; a baseline without " +
+      "one takes the run's") {
+    assume(havePython, "python3 not on PATH")
+    val dir = Files.createTempDirectory("fold_sf")
+    seedHistory(dir, Seq(1.00, 1.02, 0.99, 0.98, 1.01))
+    write(dir, "bench_baseline.json",
+      """{"source": "r17", "cpus": 4, "sf": "sf0.1",
+        | "queries": {"q_freak": 0.98}}""".stripMargin)
+    val before = (Files.readString(dir.resolve("bench_baseline.json")),
+      Files.readString(dir.resolve("bench_history.json")))
+    // another sf, a look-alike dir, and a run that states no sf: refused,
+    // nothing written
+    Seq(""""sf": "/data/sf0.01", """, """"sf": "/data/sf0.1b", """, "")
+      .foreach { sf =>
+        write(dir, "bench_out.json",
+          s"""{$sf"cpus": 4, "queries": {"q_freak": 0.1, "q_norm": 0.1}}""")
+        val (rc, out) = fold(dir, "--source", s"run at [$sf]")
+        assert(rc != 0 && out.contains("refusing to fold"), out)
+        assert((Files.readString(dir.resolve("bench_baseline.json")),
+          Files.readString(dir.resolve("bench_history.json"))) === before)
+      }
+    // the same sf folds, with or without a trailing slash
+    write(dir, "bench_out.json",
+      """{"sf": "/data/sf0.1/", "cpus": 4,
+        | "queries": {"q_freak": 0.99, "q_norm": 0.55}}""".stripMargin)
+    val (rcSame, outSame) = fold(dir, "--source", "sf0.1 run")
+    assert(rcSame == 0, outSame)
+    assert(Bench.floorsAt(dir.resolve("bench_baseline.json"), 4,
+      "/data/sf0.1")("q_freak") == 0.98)
+    // a baseline with no sf adopts the first run's basename
+    val fresh = Files.createTempDirectory("fold_sf_fresh")
+    seedHistory(fresh, Seq(1.00, 1.02, 0.99))
+    write(fresh, "bench_baseline.json",
+      """{"cpus": 4, "queries": {"q_freak": 1.0}}""")
+    write(fresh, "bench_out.json",
+      """{"sf": "/data/sf0.01", "cpus": 4,
+        | "queries": {"q_freak": 1.0, "q_norm": 0.5}}""".stripMargin)
+    val (rcFresh, outFresh) = fold(fresh, "--source", "first run")
+    assert(rcFresh == 0, outFresh)
+    assert(Files.readString(fresh.resolve("bench_baseline.json"))
+      .contains(""""sf": "sf0.01""""))
+    assert(Bench.floorsAt(fresh.resolve("bench_baseline.json"), 4,
+      "/data/sf0.01").nonEmpty)
+    assert(Bench.floorsAt(fresh.resolve("bench_baseline.json"), 4,
+      "/data/sf0.1").isEmpty)
   }
 
   test("small windows (<3 samples) admit the min: a new query's floor " +

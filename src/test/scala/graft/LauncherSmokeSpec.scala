@@ -15,20 +15,45 @@ import org.scalatest.funsuite.AnyFunSuite
   * .avi extension, a .txt the extension filter must drop) → real
   * decode → TFRecord sink, all in a separate spark-submit JVM.
   *
-  * Env-gated like the FFmpeg/ONNX smokes: needs the Spark distribution
-  * launcher and the packaged application jar (`sbt package`).
+  * Needs the Spark distribution launcher. The application jar the
+  * launcher submits is written here, before the launch, from the
+  * compiled classes under test (`target/scala-2.13/classes`, which
+  * `Test/compile` fills, `META-INF/services` included), so the smoke
+  * never runs a stale or missing `sbt package` build.
   */
 class LauncherSmokeSpec extends AnyFunSuite {
 
   private val submit = Paths.get(
     sys.env.getOrElse("SPARK_HOME", "/opt/spark"), "bin", "spark-submit")
+  private val classes = Paths.get("target/scala-2.13/classes")
   private val jar = Paths.get(
     "target/scala-2.13/videostotfrecordsspark_2.13-0.1.0.jar")
+
+  /** Jar every file under [[classes]] into [[jar]], replacing it whole. */
+  private def packageClasses(): Unit = {
+    val tmp = Files.createTempFile(jar.getParent, "launcher", ".jar")
+    val manifest = new java.util.jar.Manifest()
+    manifest.getMainAttributes.put(
+      java.util.jar.Attributes.Name.MANIFEST_VERSION, "1.0")
+    val out = new java.util.jar.JarOutputStream(
+      Files.newOutputStream(tmp), manifest)
+    val files = Files.walk(classes)
+    try files.filter(Files.isRegularFile(_)).sorted().forEach { f =>
+      val name = classes.relativize(f).toString
+      if (name != "META-INF/MANIFEST.MF") {
+        out.putNextEntry(new java.util.jar.JarEntry(name))
+        Files.copy(f, out)
+        out.closeEntry()
+      }
+    } finally { files.close(); out.close() }
+    Files.move(tmp, jar, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 
   test("run-pipeline.sh local: glob → magic-routed real decode → " +
       "TFRecord sink, in a spark-submit JVM") {
     assume(Files.isExecutable(submit), s"no $submit in this environment")
-    assume(Files.exists(jar), "application jar not packaged")
+    packageClasses()
 
     val corpus = Files.createTempDirectory("launcher_corpus")
     Files.createDirectories(corpus.resolve("catA/clips"))

@@ -4,13 +4,15 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 
-/** [[ConvEmbedder]]: REAL convolutional inference, provable offline —
-  * conv→ReLU→maxpool→dense→ReLU→dense over `.npy` weights, golden-checked
-  * against hand-computed values, proven GEOMETRY-aware (images with
-  * identical channel statistics but different spatial layout embed
-  * differently — the property [[LinearEmbedder]]'s global features
-  * cannot have), batch/partition-invariant, and run end-to-end on
-  * COMPRESSED real decode (MJPEG AVI → conv → TFRecord).
+/** [[ConvEmbedder]] + [[Npy]]: REAL convolutional inference, provable
+  * offline — weights round-trip through the public .npy format;
+  * conv→ReLU→maxpool→dense→ReLU→dense is golden-checked against
+  * hand-computed values, proven GEOMETRY-aware (images with identical
+  * channel statistics but different spatial layout embed differently —
+  * the property global channel statistics cannot have),
+  * batch/partition-invariant, and run end-to-end on raw (y4m) and
+  * COMPRESSED (MJPEG AVI) real decode → conv → TFRecord. The offline
+  * counterpart of the ONNX smoke that cancels without runtime jars.
   */
 class ConvEmbedSpec extends SparkSpec {
 
@@ -30,6 +32,26 @@ class ConvEmbedSpec extends SparkSpec {
     put(dir, "b1", Seq(2), Array(0f, 0f))
     put(dir, "W2", Seq(2, 2), Array.fill(4)(1f))
     put(dir, "b2", Seq(2), b2)
+  }
+
+  test("NPY round-trips and rejects the unsupported loudly") {
+    val data = Array.tabulate(12)(_ * 0.5f)
+    val bytes = Npy.write(Seq(3, 4), data)
+    val (shape, back) = Npy.read(bytes)
+    assert(shape === Seq(3, 4) && back.toSeq === data.toSeq)
+    // 1-D writes the spec's one-tuple form "(n,)"
+    val (s1, b1) = Npy.read(Npy.write(Seq(5), Array.fill(5)(1f)))
+    assert(s1 === Seq(5) && b1.forall(_ == 1f))
+    // header is 64-byte aligned as the spec prescribes
+    assert((10 + ((bytes(8) & 0xff) | ((bytes(9) & 0xff) << 8))) % 64 === 0)
+
+    intercept[IllegalArgumentException](Npy.read("junk".getBytes))
+    intercept[IllegalArgumentException](Npy.read(bytes.dropRight(1)))
+    val asF = Npy.write(Seq(3, 4), data)
+    val hdr = new String(asF, "ISO-8859-1")
+      .replace("'fortran_order': False", "'fortran_order': True ")
+      .getBytes("ISO-8859-1")
+    intercept[IllegalArgumentException](Npy.read(hdr))
   }
 
   test("golden forward pass: pool -> conv -> ReLU -> maxpool -> dense x2") {
@@ -72,11 +94,15 @@ class ConvEmbedSpec extends SparkSpec {
     }
     val Seq(a, b) = e.embed(Seq(leftRight, topBottom), 8, 8)
     assert(a.toSeq !== b.toSeq)
-    // sanity: the stat-blind embedder cannot tell them apart on its
-    // 12 statistical features (banding may differ, but means don't)
-    val fA = LinearEmbedder.features(leftRight).take(12).toSeq
-    val fB = LinearEmbedder.features(topBottom).take(12).toSeq
-    assert(fA === fB)
+    // sanity: per-channel mean/std/min/max cannot tell them apart
+    def channelStats(img: Array[Float]): Seq[Double] = (0 until 3).flatMap {
+      c =>
+        val v = img.indices.filter(_ % 3 == c).map(img(_).toDouble)
+        val mean = v.sum / v.size
+        Seq(mean, math.sqrt(v.map(x => (x - mean) * (x - mean)).sum / v.size),
+          v.min, v.max)
+    }
+    assert(channelStats(leftRight) === channelStats(topBottom))
     // and the same image twice embeds identically (determinism)
     val Seq(a2, a3) = e.embed(Seq(leftRight, leftRight), 8, 8)
     assert(a2.toSeq === a.toSeq && a3.toSeq === a.toSeq)
@@ -118,6 +144,55 @@ class ConvEmbedSpec extends SparkSpec {
     assert(one.nonEmpty && one === many) // slicing never changes the math
     assert(one.values.forall(_.size === 4))
     assert(one.values.toSet.size > 1) // real pixels → distinct logits
+  }
+
+  test("ZERO-STUB pipeline: y4m real decode -> real conv -> TFRecord") {
+    import graft.Main
+    import graft.tfrecord.TFRecords
+    import spark.implicits._
+    def gray(y: Int): Array[Byte] = {
+      val f = new Array[Byte](4 * 4 + 2 * 4); java.util.Arrays.fill(f, y.toByte)
+      java.util.Arrays.fill(f, 16, 24, 128.toByte)
+      f
+    }
+    val clips = Seq(
+      ("file:/zs/catA/c/v1.avi",
+        Y4MFrameDecoder.write(4, 4, 2, 1, "420mpeg2", Seq(gray(60)))),
+      ("file:/zs/catB/c/v2.avi",
+        Y4MFrameDecoder.write(4, 4, 2, 1, "420mpeg2",
+          Seq(gray(120), gray(200)))))
+    val wDir = Files.createTempDirectory("conv_y4m").toString
+    ConvEmbedder.writeWeights(wDir, filters = 4, hidden = 8, dim = 6,
+      seed = 11L)
+    val out = Files.createTempDirectory("zs_out").toString
+    Main.run(clips.toDF("filename", "content"), out,
+      Main.Config(mode = Main.FullVideo, embeddingDim = 6),
+      decoder = new Y4MFrameDecoder,
+      embedder = Some(new ConvEmbedder(wDir, dim = 6)))
+    val back = TFRecords.read(spark, out, Main.sampleSchema(Main.FullVideo))
+      .selectExpr("filename", "label", "size(logits) AS nf",
+        "aggregate(flatten(logits), 0D, (a, x) -> a + x) AS lsum")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2),
+        r.getDouble(3))).sortBy(_._1)
+    assert(back.map(t => (t._1, t._2, t._3)).toSeq === Seq(
+      ("file:/zs/catA/c/v1.avi", "catA", 1),
+      ("file:/zs/catB/c/v2.avi", "catB", 2)))
+    // different real pixels through real weights → different embeddings
+    assert(back(0)._4 !== back(1)._4)
+    // and different WEIGHTS change the embeddings of the same pixels:
+    // the logits demonstrably come from the loaded model, not the input
+    val wDir2 = Files.createTempDirectory("conv_y4m2").toString
+    ConvEmbedder.writeWeights(wDir2, filters = 4, hidden = 8, dim = 6,
+      seed = 12L)
+    val out2 = Files.createTempDirectory("zs_out2").toString
+    Main.run(clips.toDF("filename", "content"), out2,
+      Main.Config(mode = Main.FullVideo, embeddingDim = 6),
+      decoder = new Y4MFrameDecoder,
+      embedder = Some(new ConvEmbedder(wDir2, dim = 6)))
+    val sum2 = TFRecords.read(spark, out2, Main.sampleSchema(Main.FullVideo))
+      .selectExpr("aggregate(flatten(logits), 0D, (a, x) -> a + x) AS s")
+      .as[Double].collect().sorted
+    assert(sum2.toSeq !== back.map(_._4).sorted.toSeq)
   }
 
   test("COMPRESSED decode -> conv inference -> TFRecord, end to end") {

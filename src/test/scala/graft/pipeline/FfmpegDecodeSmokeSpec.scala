@@ -86,11 +86,22 @@ class FfmpegDecodeSmokeSpec extends AnyFunSuite {
     } finally f.delete()
   }
 
-  test("orSynthetic picks the real decoder exactly when JavaCV loads") {
-    val dec = FfmpegFrameDecoder.orSynthetic()
-    if (FfmpegFrameDecoder.available)
-      assert(dec.isInstanceOf[FfmpegFrameDecoder])
-    else
-      assert(dec.isInstanceOf[SyntheticFrameDecoder])
+  test("the default fallback decodes with JavaCV, refuses without") {
+    val auto = new AutoFrameDecoder()
+    if (FfmpegFrameDecoder.available) {
+      val f = java.io.File.createTempFile("graft-ffmpeg-smoke3", ".mp4")
+      try {
+        // an H.264 mp4: the mp4 router hands its pixels to the fallback
+        encodeClip(f.getAbsolutePath, w = 16, h = 16, nFrames = 6, fps = 4.0)
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        def shape(d: FrameDecoder) = d.decode(f.getName, bytes, 500L)
+          .map(fr => (fr.timestampMs, fr.height, fr.width)).toList
+        assert(shape(auto) == shape(new FfmpegFrameDecoder()))
+      } finally f.delete()
+    } else {
+      val e = intercept[IllegalArgumentException](
+        auto.decode("v/l/s/clip.avi", "not a video".getBytes, 500L).toList)
+      assert(e.getMessage.contains("v/l/s/clip.avi"), e.getMessage)
+    }
   }
 }

@@ -73,9 +73,8 @@ class FramesSpec extends SparkSpec {
   }
 
   test("O7 production decoder without its runtime fails loudly") {
-    // the graceful path is FfmpegFrameDecoder.orSynthetic()
-    // (LoadIfPresentSpec); the HARD path must still fail with an
-    // actionable message rather than decode nothing
+    // the routers' default fallback: it must fail with an actionable
+    // message rather than decode nothing
     val e = intercept[IllegalArgumentException] {
       new FfmpegFrameDecoder().decode("x.mp4", null, 500)
     }
@@ -96,24 +95,26 @@ class FramesSpec extends SparkSpec {
   private def put(dir: String, name: String, bytes: Array[Byte]): Unit =
     java.nio.file.Files.write(java.nio.file.Path.of(dir, name), bytes)
 
-  test("listed files: one row per synthetic frame; non-video files filtered") {
+  test("undecodable listed files fail, naming the file; non-videos " +
+      "filtered") {
     val dir = java.nio.file.Files.createTempDirectory("frames_fake").toString
-    Seq("a.mp4", "b.mkv", "c.avi", "notes.txt", "d.webm").foreach(n =>
-      put(dir, n, s"fake-$n".getBytes))
-    val byFile = framesOf(dir)
-    assert(byFile.keySet === Set("a.mp4", "b.mkv", "c.avi"))
-    byFile.values.foreach { fs =>
-      // fake bytes fall back to the synthetic decoder: hash-derived count
-      val expected = 1 + java.lang.Math.floorMod(fs.head.filename.hashCode, 7)
-      assert(fs.length === expected, fs.head.filename)
-      assert(fs.forall(f => f.height === 8 && f.width === 8))
+    Seq("notes.txt", "d.webm").foreach(n => put(dir, n, s"fake-$n".getBytes))
+    // nothing listed survives the extension filter: no rows, no failure
+    assert(framesOf(dir).isEmpty)
+    // each fake-content video name, alone, fails with a typed error
+    Seq("a.mp4", "b.mkv", "c.avi").foreach { n =>
+      val one = java.nio.file.Files.createTempDirectory("frames_bad")
+      java.nio.file.Files.writeString(one.resolve(n), s"fake-$n")
+      val e = rootCause(intercept[Exception](framesOf(one.toString)))
+      assert(e.isInstanceOf[IllegalArgumentException], e.toString)
+      assert(e.getMessage.contains(s"$one/$n"), e.getMessage)
     }
   }
 
   test("listed real y4m and MJPEG-AVI files REAL-decode through Frames.extract") {
     val dir = java.nio.file.Files.createTempDirectory("frames_real").toString
-    // a real y4m (75%-red constant frame) under a LYING .mp4 extension,
-    // a real MJPEG-AVI (solid mid-gray), and a fake-content video name
+    // a real y4m (75%-red constant frame) under a LYING .mp4 extension
+    // and a real MJPEG-AVI (solid mid-gray)
     val redFrame = {
       val f = new Array[Byte](2 * 2 + 2 * 1)
       java.util.Arrays.fill(f, 0, 4, 82.toByte)
@@ -125,9 +126,8 @@ class FramesSpec extends SparkSpec {
     val gray = Array.fill(4 * 4 * 3)(0.5f)
     put(dir, "gray.avi", AviMjpegFrameDecoder.write(4, 4, 2, 1,
       Seq(AviMjpegFrameDecoder.encodeJpeg(gray, 4, 4))))
-    put(dir, "fake.mkv", "not a video".getBytes)
     val byFile = framesOf(dir)
-    assert(byFile.keySet === Set("fake.mkv", "gray.avi", "red.mp4"))
+    assert(byFile.keySet === Set("gray.avi", "red.mp4"))
     // the real containers carry their REAL dimensions and pixels
     val gray0 = byFile("gray.avi").head
     assert(gray0.height === 4 && gray0.width === 4)
@@ -135,9 +135,6 @@ class FramesSpec extends SparkSpec {
     val red0 = byFile("red.mp4").head
     assert(red0.height === 2 && red0.width === 2)
     assert(red0.image(0) === 1.0f) // BT.601 75%-red clamps R to 1 (the golden)
-    // fake content falls back to the synthetic decoder's 8x8 shape
-    assert(byFile("fake.mkv").forall(f =>
-      f.height === 8 && f.image.length === 8 * 8 * 3))
   }
 
   test("a listed real ISO-BMFF mp4 under a lying .mkv name REAL-decodes") {

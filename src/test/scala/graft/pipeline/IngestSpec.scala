@@ -194,7 +194,7 @@ class IngestSpec extends SparkSpec {
     assert(listed.count() === 50)
   }
 
-  test("O1/O2 file listing: binaryFile glob scan and in-memory create") {
+  test("O1 file listing: binaryFile glob scan") {
     val dir = java.nio.file.Files.createTempDirectory("ingest_ls")
     Seq("a.mp4", "b.txt", "c.mkv").foreach { n =>
       java.nio.file.Files.write(dir.resolve(n), Array[Byte](1, 2, 3))
@@ -202,10 +202,6 @@ class IngestSpec extends SparkSpec {
     val listed = Ingest.listFiles(spark, s"$dir/*")
       .as[String].collect().map(_.split('/').last).sorted
     assert(listed.toSeq === Seq("a.mp4", "b.txt", "c.mkv"))
-
-    val created = Ingest.fromList(spark, Seq("x/y/z/f.mp4", "g.avi"))
-    assert(created.columns.toSeq === Seq("filename"))
-    assert(created.count() === 2)
   }
 
   test("O4 extension filter: keeps mkv/avi/mp4, handles edge cases") {
@@ -237,9 +233,6 @@ class IngestSpec extends SparkSpec {
     val files = Seq("a.mp4").toDF("filename")
     intercept[IllegalArgumentException] {
       Ingest.splitByHash(files, 0.7, 0.2, 0.2)
-    }
-    intercept[IllegalArgumentException] {
-      Ingest.splitRandom(files, 0.5, 0.1, 0.1, seed = 1)
     }
   }
 
@@ -276,16 +269,6 @@ class IngestSpec extends SparkSpec {
       SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(res.passed, res.status.toString)
     files.unpersist()
-  }
-
-  test("O6 splitRandom is seeded-reproducible and a partition") {
-    val files = (1 to 200).map(i => s"v/l/s/f$i.mp4").toDF("filename")
-    val a = Ingest.splitRandom(files, 0.7, 0.15, 0.15, seed = 42)
-      .orderBy("filename").as[(String, String)].collect()
-    val b = Ingest.splitRandom(files, 0.7, 0.15, 0.15, seed = 42)
-      .orderBy("filename").as[(String, String)].collect()
-    assert(a.sameElements(b))
-    assert(a.map(_._2).forall(Set("train", "val", "test")))
   }
 
   test("O7 plumbing: URI split mirrors urlparse netloc/path semantics") {

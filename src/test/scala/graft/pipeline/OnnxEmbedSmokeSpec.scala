@@ -51,10 +51,4 @@ class OnnxEmbedSmokeSpec extends AnyFunSuite {
     assert(solo.head.sameElements(out.head),
       "batch context changed a row's embedding")
   }
-
-  test("orHash picks the real embedder exactly when ORT loads") {
-    val e = OnnxEmbedder.orHash("/nonexistent.onnx", Seq(3, 8, 8), 16)
-    if (OnnxEmbedder.available) assert(e.isInstanceOf[OnnxEmbedder])
-    else assert(e.isInstanceOf[HashEmbedder])
-  }
 }
