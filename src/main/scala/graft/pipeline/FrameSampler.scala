@@ -87,7 +87,7 @@ private[pipeline] object FrameSampler {
     * computed exactly in BigInt because every factor is file content.
     * Inside the bound every tick's timestamp fits a Long.
     */
-  private def tickCount(filename: String, t: Timeline,
+  private[pipeline] def tickCount(filename: String, t: Timeline,
       sampleRateMs: Long): Int = {
     val step = BigInt(sampleRateMs) * t.timescale
     val n = (BigInt(1000) * math.max(t.durationUnits, 0L) + step - 1) / step

@@ -120,10 +120,12 @@ object FfmpegFrameDecoder {
       Class.forName("org.bytedeco.javacv.FFmpegFrameGrabber"); true
     } catch { case _: ClassNotFoundException | _: LinkageError => false }
 
-  /** Reflective decode loop; only reachable when [[available]]. Frames
-    * are materialized before the grabber closes (the reference holds the
-    * full sampled-frame list in memory too — at 2 fps this is small
-    * relative to the container bytes already held in `content`).
+  /** Reflective decode loop; only reachable when [[available]]. The
+    * ticks are [[FrameSampler]]'s rule and bound over FFmpeg's duration in
+    * µs; a file that reports no duration gets the one tick at 0 ms. Frames
+    * are grabbed one at a time as the iterator is drained, and the grabber
+    * stops when the iterator runs out, when a grab fails, or when the
+    * Spark task ends.
     */
   private[pipeline] def grabFrames(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] = {
@@ -143,12 +145,20 @@ object FfmpegFrameDecoder {
     val converter = convCls.getConstructor().newInstance()
     val convert = convCls.getMethod("convert", frameCls)
     start.invoke(grabber)
-    try {
+    var open = true
+    def close(): Unit = if (open) { open = false; stop.invoke(grabber) }
+    def guarded[A](step: => A): A =
+      try step catch { case e: Throwable => close(); throw e }
+    guarded {
       val durationUs = lengthInTime.invoke(grabber).asInstanceOf[Long]
-      val n = math.max(1L, durationUs / 1000L / sampleRateMs + 1L).toInt
+      val n = FrameSampler.tickCount(filename,
+        Timeline(1000000L, Array.emptyLongArray, math.max(durationUs, 1L)),
+        sampleRateMs)
       val fps = FrameDecoder.effectiveFps(sampleRateMs)
-      val frames = (0 until n).flatMap { i =>
-        val tsMs = i.toLong * sampleRateMs
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => close()))
+      val frames = Iterator.range(0, n).flatMap { i =>
+        val tsMs = i * sampleRateMs
         setTs.invoke(grabber, java.lang.Long.valueOf(tsMs * 1000L))
         Option(grabImage.invoke(grabber)).map { frame =>
           val img = convert.invoke(converter, frame)
@@ -157,8 +167,13 @@ object FfmpegFrameDecoder {
             FrameSampler.imageToRgb(img))
         }
       }
-      frames.iterator
-    } finally stop.invoke(grabber)
+      new Iterator[DecodedFrame] {
+        def hasNext: Boolean = open && guarded(frames.hasNext || {
+          close(); false
+        })
+        def next(): DecodedFrame = guarded(frames.next())
+      }
+    }
   }
 }
 

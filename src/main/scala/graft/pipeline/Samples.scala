@@ -48,13 +48,11 @@ object Samples {
       .agg(collect_list(frameStruct(listCols)).as("frames"))
 
   /** O15 — single_frame mode: every frame is its own sample; the "lists"
-    * are one-element arrays. Shuffle-free.
+    * are one-element arrays. A plain projection, shuffle-free.
     */
   def singleFrame(frames: DataFrame, listCols: Seq[String]): DataFrame =
-    frames
-      .withColumn("frames", array(frameStruct(listCols)))
-      .select(contextCols.map(col) ++
-        pivoted(sort_array(col("frames")), listCols): _*)
+    frames.select(contextCols.map(col) ++
+      listCols.map(c => array(col(c)).as(c)): _*)
 
   /** O14 — full_video mode: all frames of one video form one sample. */
   def fullVideo(frames: DataFrame, listCols: Seq[String]): DataFrame =

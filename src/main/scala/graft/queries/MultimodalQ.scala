@@ -2,15 +2,14 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.ops.Materialize._
-import graft.pipeline.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Multimodal metadata surface under the correctness gate. Binary decode /
-  * resize / feature extraction aren't SQL (covered by MultimodalSpec with
-  * the stub decoder); what IS oracle-checkable is the metadata-only layer:
-  * relational accounting over binary payload columns without decoding.
+/** Multimodal metadata surface under the correctness gate. Frame decode
+  * is the video → TFRecord pipeline's (`graft.pipeline.Frames.extract`);
+  * what IS oracle-checkable is the metadata-only layer: relational
+  * accounting over binary payload columns without decoding.
   * Assets are synthesized from `documents` (text bytes as payload, kind by
   * doc_id mod 3) so DuckDB sees identical bytes.
   */
@@ -88,6 +87,38 @@ object MultimodalQ {
       when(cs(i) > cs(i + 1), lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
   }
+
+  /** Metadata-only relational surface: per-kind accounting computed WITHOUT
+    * decoding — the property that makes 100 TB of media queryable (payload
+    * columns are pruned; only lengths/hashes are read).
+    *
+    * The content fingerprint is the NUMERIC 60-bit md5 prefix, not the hex
+    * string: a long min aggregates via HashAggregate, where a string min
+    * falls back to SortAggregate (sorts every partition — the same
+    * trade documented at TextOps.minhash).
+    */
+  private[graft] def assetStats(assets: DataFrame): DataFrame =
+    assets
+      .select(col("asset_id"), col("kind"), col("content"))
+      .groupBy(col("kind"))
+      .agg(
+        count(lit(1)).as("n_assets"),
+        sum(length(col("content"))).as("total_bytes"),
+        min(conv(substring(md5(col("content")), 1, 15), 16, 10)
+          .cast("long")).as("min_content_hash"))
+
+  /** Exact dedup of binary assets by payload hash: duplicate groups
+    * (≥2 members) with their canonical (smallest) asset id. The payload
+    * is hashed in the scan projection and pruned before the exchange —
+    * content bytes never shuffle.
+    */
+  private[graft] def dedupByContent(assets: DataFrame): DataFrame =
+    assets
+      .select(col("asset_id"), col("kind"),
+        md5(col("content")).as("content_hash"))
+      .groupBy(col("kind"), col("content_hash"))
+      .agg(count(lit(1)).as("n_assets"), min(col("asset_id")).as("canonical_id"))
+      .filter(col("n_assets") >= 2)
 
   /** The 4 (blk, bv) block structs of a dhash column — ONE definition
     * shared by the batch near-dup query and the streaming asset-dedup
@@ -213,7 +244,7 @@ object MultimodalQ {
         FROM l2 GROUP BY cluster_id""")),
 
     Q("mm_asset_stats",
-      (s, dir) => Multimodal.assetStats(
+      (s, dir) => assetStats(
         Tables.sharded(s, dir, "documents").select(
           col("doc_id").as("asset_id"),
           element_at(array(lit("image"), lit("audio"), lit("video")),
@@ -245,7 +276,7 @@ object MultimodalQ {
     // first pass of any media pipeline: the payload column is read once,
     // hashed in place, and pruned before the exchange.
     Q("mm_asset_dedup",
-      (s, dir) => Multimodal.dedupByContent(
+      (s, dir) => dedupByContent(
         Tables.sharded(s, dir, "documents").select(
           col("doc_id").as("asset_id"),
           element_at(array(lit("image"), lit("audio"), lit("video")),

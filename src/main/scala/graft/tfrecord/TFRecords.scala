@@ -25,13 +25,22 @@ object TFRecords {
     */
   def write(samples: DataFrame, outputDir: String, numShards: Int,
       seed: Long = 42L, splitCol: String = "dataset"): Unit =
+    shuffledWrite(samples, outputDir, numShards, seed, splitCol, "overwrite")
+
+  /** The one shard rule and sink chain behind [[write]] and
+    * [[writeStream]]: shuffle on a `seed`ed random key into `numShards`
+    * partitions, then save each split's SequenceExample shards under
+    * `{outputDir}/data/{splitCol}=…` with save `mode`.
+    */
+  private def shuffledWrite(samples: DataFrame, outputDir: String,
+      numShards: Int, seed: Long, splitCol: String, mode: String): Unit =
     samples
       .repartition(numShards, rand(seed))
       .write
       .format("tfrecord")
       .option("recordType", "SequenceExample")
       .partitionBy(splitCol)
-      .mode("overwrite")
+      .mode(mode)
       .save(s"$outputDir/data")
 
   /** Read sharded TFRecords back. `schema` must be the data schema WITHOUT
@@ -65,13 +74,7 @@ object TFRecords {
     samples.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .repartition(numShards, rand(seed + batchId))
-          .write
-          .format("tfrecord")
-          .option("recordType", "SequenceExample")
-          .partitionBy(splitCol)
-          .mode("append")
-          .save(s"$outputDir/data")
+        shuffledWrite(batch, outputDir, numShards, seed + batchId, splitCol,
+          "append")
       }
 }

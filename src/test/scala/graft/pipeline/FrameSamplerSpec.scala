@@ -97,4 +97,15 @@ class FrameSamplerSpec extends AnyFunSuite {
       dec.decodeMeta("p.y4m", past, 1))
     assert(e.getMessage.contains("tick bound"))
   }
+
+  test("FFmpeg's µs duration follows the same tick rule and bound") {
+    // the JavaCV loop counts ticks over Timeline(1e6 units/s, duration µs)
+    def ticks(durationUs: Long) = FrameSampler.tickCount("f.webm",
+      Timeline(1000000L, Array.emptyLongArray, durationUs), 500L)
+    assert(ticks(2000000L) === 4) // exact multiple: ticks 0..1500 ms
+    assert(ticks(2200000L) === 5)
+    assert(ticks(1L) === 1) // no reported duration: the tick at 0 ms
+    val e = intercept[IllegalArgumentException](ticks(Long.MaxValue))
+    assert(e.getMessage.contains("tick bound"))
+  }
 }

@@ -1,98 +1,39 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.queries.MultimodalQ
 
+/** The metadata-only media queries (`mm_asset_stats`, `mm_asset_dedup`)
+  * over binary payload columns: they never decode.
+  */
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def assets = Seq(
-    MediaAsset(1L, "image", "imgbytes-1".getBytes, 4, 4, 0),
-    MediaAsset(2L, "image", "imgbytes-2".getBytes, 8, 2, 0),
-    MediaAsset(3L, "audio", "pcmbytes-3".getBytes, 0, 0, 160),
-    MediaAsset(4L, "video", "vidbytes-4".getBytes, 4, 4, 0)).toDS()
-
-  test("decodeImages: only images, declared shape, deterministic pixels") {
-    val imgs = Multimodal.decodeImages(assets, new SyntheticMediaDecoder())
-      .collect().sortBy(_.asset_id)
-    assert(imgs.map(_.asset_id).toSeq === Seq(1L, 2L))
-    assert(imgs(0).pixels.length === 4 * 4 * 3)
-    assert(imgs(1).pixels.length === 8 * 2 * 3)
-    assert(imgs(0).pixels.forall(p => p >= 0f && p < 1f))
-    val again = Multimodal.decodeImages(assets, new SyntheticMediaDecoder())
-      .collect().sortBy(_.asset_id)
-    assert(imgs(0).pixels.sameElements(again(0).pixels))
-  }
-
-  test("resize: nearest-neighbor shape and identity cases") {
-    val imgs = Multimodal.decodeImages(assets, new SyntheticMediaDecoder())
-    val resized = Multimodal.resize(imgs, 2, 2).collect().sortBy(_.asset_id)
-    assert(resized.forall(im => im.height == 2 && im.width == 2 &&
-      im.pixels.length == 12))
-    // identity resize preserves pixels exactly
-    val id = Multimodal.resize(
-      Multimodal.decodeImages(assets, new SyntheticMediaDecoder())
-        .filter(_.asset_id == 1L), 4, 4).head()
-    val orig = Multimodal.decodeImages(assets, new SyntheticMediaDecoder())
-      .filter(_.asset_id == 1L).head()
-    assert(id.pixels.sameElements(orig.pixels))
-  }
-
-  test("imageStats: 6 features (channel means + variances) in range") {
-    val f = Multimodal.imageStats(
-      Multimodal.decodeImages(assets, new SyntheticMediaDecoder()))
-      .collect().sortBy(_.asset_id)
-    assert(f.length === 2)
-    assert(f.forall(_.features.length === 6))
-    assert(f.forall(_.features.take(3).forall(m => m > 0f && m < 1f)))
-    assert(f.forall(_.features.drop(3).forall(v => v >= 0f)))
-  }
-
-  test("audioEnergy: windowed RMS over decoded samples") {
-    val f = Multimodal.audioEnergy(assets, new SyntheticMediaDecoder(), 40)
-      .collect()
-    assert(f.map(_.asset_id).toSeq === Seq(3L))
-    assert(f(0).features.length === 4) // 160 samples / 40 per window
-    assert(f(0).features.forall(e => e > 0f && e < 1f))
-  }
-
   test("assetStats: metadata-only accounting never decodes") {
-    val stats = Multimodal.assetStats(assets.toDF())
-      .orderBy("kind").collect()
+    val assets = Seq(
+      (1L, "image", "imgbytes-1".getBytes),
+      (2L, "image", "imgbytes-2".getBytes),
+      (3L, "audio", "pcmbytes-3".getBytes),
+      (4L, "video", "vidbytes-4".getBytes)).toDF("asset_id", "kind", "content")
+    val stats = MultimodalQ.assetStats(assets).orderBy("kind").collect()
     assert(stats.map(_.getString(0)).toSeq === Seq("audio", "image", "video"))
     assert(stats.map(r => r.getLong(1)).toSeq === Seq(1L, 2L, 1L))
   }
 
-  test("sampleVideoFrames: 1-to-N frame rows per video asset, no bytes out") {
-    import spark.implicits._
+  test("dedupByContent: groups of two or more, smallest id, never across kinds") {
+    val shared = "same-bytes".getBytes
     val assets = Seq(
-      MediaAsset(1L, "video", "vid-one".getBytes, 4, 4, 0),
-      MediaAsset(2L, "image", "img".getBytes, 4, 4, 0),
-      MediaAsset(3L, "video", "vid-two".getBytes, 4, 4, 0)).toDS()
-    val frames = Multimodal.sampleVideoFrames(assets,
-      new SyntheticFrameDecoder(height = 4, width = 4), 500L).collect()
-    // only video assets expand; each produces >= 1 frame
-    val byAsset = frames.groupBy(_.asset_id / 1000)
-    assert(byAsset.keySet === Set(1L, 3L))
-    assert(frames.forall(_.pixels.length === 4 * 4 * 3))
-    // deterministic across calls
-    val again = Multimodal.sampleVideoFrames(assets,
-      new SyntheticFrameDecoder(height = 4, width = 4), 500L).collect()
-    assert(frames.map(_.pixels.toSeq).toSeq === again.map(_.pixels.toSeq).toSeq)
-  }
-
-  test("sampleVideoFrames: frames derive from content, not asset id") {
-    import spark.implicits._
-    val sameBytes = "identical-payload".getBytes
-    val assets = Seq(
-      MediaAsset(1L, "video", sameBytes, 4, 4, 0),
-      MediaAsset(2L, "video", sameBytes.clone(), 4, 4, 0),
-      MediaAsset(3L, "video", "different".getBytes, 4, 4, 0)).toDS()
-    val frames = Multimodal.sampleVideoFrames(assets,
-      new SyntheticFrameDecoder(height = 4, width = 4), 500L).collect()
-    def pixelsOf(asset: Long) = frames
-      .filter(_.asset_id / 1000 == asset).sortBy(_.asset_id)
-      .map(_.pixels.toSeq).toSeq
-    assert(pixelsOf(1L) === pixelsOf(2L)) // identical content ⇒ identical
-    assert(pixelsOf(1L) !== pixelsOf(3L)) // different content ⇒ different
+      (7L, "image", shared),
+      (3L, "image", shared.clone()),
+      (5L, "image", shared.clone()),
+      (1L, "video", shared.clone()), // same bytes, other kind: own group
+      (2L, "audio", "unique-a".getBytes),
+      (4L, "audio", "unique-b".getBytes),
+      (9L, "video", "clip".getBytes),
+      (8L, "video", "clip".getBytes)).toDF("asset_id", "kind", "content")
+    val groups = MultimodalQ.dedupByContent(assets)
+      .select("kind", "n_assets", "canonical_id")
+      .as[(String, Long, Long)].collect().sortBy(_._3).toSeq
+    assert(groups === Seq(("image", 3L, 3L), ("video", 2L, 8L)))
   }
 }

@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.types._
 
 class SamplesSpec extends SparkSpec {
   import spark.implicits._
@@ -27,6 +28,24 @@ class SamplesSpec extends SparkSpec {
       .collect()
     assert(r.map(_._6) === Array(Seq(0L), Seq(500L)))
     assert(r.map(_._7) === Array(Seq(20.0), Seq(22.0)))
+    // the exact output schema: context columns as they came, then one
+    // non-null array per list column whose containsNull is the column's
+    // own nullability
+    val withNulls = frames.withColumn("note",
+      when(col("score") > 14.0, lit("late")))
+    assert(Samples.singleFrame(withNulls, Seq("timestamp_ms", "score", "note"))
+      .schema === StructType(Seq(
+        StructField("filename", StringType, nullable = true),
+        StructField("label", StringType, nullable = true),
+        StructField("dataset", StringType, nullable = true),
+        StructField("frame_per_sec", DoubleType, nullable = false),
+        StructField("frame_total", DoubleType, nullable = false),
+        StructField("timestamp_ms", ArrayType(LongType, containsNull = false),
+          nullable = false),
+        StructField("score", ArrayType(DoubleType, containsNull = false),
+          nullable = false),
+        StructField("note", ArrayType(StringType, containsNull = true),
+          nullable = false))))
   }
 
   test("O14+O16+O17 full_video: one sample per video, sorted + pivoted") {
