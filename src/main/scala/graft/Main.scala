@@ -91,21 +91,29 @@ object Main {
             case v :: _ if v.startsWith("--") =>
               throw new IllegalArgumentException(s"$flag requires a value")
             case v :: t2 =>
+              // a non-numeric or out-of-range value names its flag too
+              def num(parse: String => Long): Long =
+                try parse(v) catch {
+                  case _: NumberFormatException =>
+                    throw new IllegalArgumentException(
+                      s"$flag must be a whole number in range, got $v")
+                }
               val next = key match {
                 case "mode" => acc.copy(cfg = acc.cfg.copy(mode = modeOf(v)))
                 case "batch_size" => acc.copy(cfg = acc.cfg.copy(
-                  batchSize = positive(flag, v.toInt).toInt))
+                  batchSize = positive(flag, num(_.toInt)).toInt))
                 case "frame_sample_rate" => acc.copy(cfg = acc.cfg.copy(
-                  sampleRateMs = positive(flag, v.toLong)))
+                  sampleRateMs = positive(flag, num(_.toLong))))
                 case "sequence_length" => acc.copy(cfg = acc.cfg.copy(
-                  sequenceLengthMs = positive(flag, v.toLong)))
+                  sequenceLengthMs = positive(flag, num(_.toLong))))
                 case "period" => acc.copy(cfg = acc.cfg.copy(
-                  periodMs = positive(flag, v.toLong)))
+                  periodMs = positive(flag, num(_.toLong))))
                 case "num_shards" => acc.copy(cfg = acc.cfg.copy(
-                  numShards = positive(flag, v.toInt).toInt))
-                case "seed" => acc.copy(cfg = acc.cfg.copy(seed = v.toLong))
+                  numShards = positive(flag, num(_.toInt)).toInt))
+                case "seed" =>
+                  acc.copy(cfg = acc.cfg.copy(seed = num(_.toLong)))
                 case "embedding_dim" => acc.copy(cfg = acc.cfg.copy(
-                  embeddingDim = positive(flag, v.toInt).toInt))
+                  embeddingDim = positive(flag, num(_.toInt)).toInt))
                 case "output_dir" => acc.copy(outDir = Some(v))
                 case "input_dir" => acc.copy(inputDir = Some(v))
                 case other => throw new IllegalArgumentException(

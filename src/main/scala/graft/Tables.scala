@@ -143,13 +143,7 @@ object Tables {
     * no query outside noise in either direction.
     */
   private val shardKey = Map(
-    "documents" -> "doc_id", "embeddings" -> "vec_id",
-    // non-query callers (streaming lookup specs, Catalog) shard other
-    // tables too — every fixture table has a spread key
-    "region" -> "r_regionkey", "nation" -> "n_nationkey",
-    "customer" -> "c_custkey", "supplier" -> "s_suppkey",
-    "part" -> "p_partkey", "orders" -> "o_orderkey",
-    "lineitem" -> "l_orderkey", "events" -> "event_id")
+    "documents" -> "doc_id", "embeddings" -> "vec_id")
 
   def sharded(spark: SparkSession, dir: String, name: String): DataFrame =
     apply(spark, dir, name)

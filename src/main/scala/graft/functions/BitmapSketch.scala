@@ -80,7 +80,7 @@ object BitmapSketch {
   /** Membership test of `id` against a finished bitmap column — pure bit
     * arithmetic per row (the BloomSketch.mightContain shape, but exact).
     * Lets a bitmap ship as a broadcast/literal column and filter
-    * executor-side, e.g. the streaming first-seen check.
+    * executor-side, e.g. a first-seen check against a prior bitmap.
     */
   def contains(bitmap: Column, id: Column): Column = {
     val word = element_at(bitmap, shiftright(id, 6).cast("int") + lit(1))

@@ -3,14 +3,12 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The data-contract check kernel shared by the batch gate
-  * (`dq_expectations` in queries.Relational) and the streaming monitor
-  * (streaming.StreamingDq): completeness, domain-range, and
-  * accepted-values violations over a lineitem-schema frame, as named
-  * CONDITIONAL-SUM aggregate columns. Every check is a commutative,
-  * combinable sum, so the SAME list folds identically map-side in a
-  * batch HashAggregate and incrementally in a Structured Streaming
-  * state store — one definition, two execution modes, zero drift.
+/** The data-contract check kernels: the scan-aggregate expectations
+  * behind `dq_expectations` (queries.Relational) — completeness,
+  * domain-range, and accepted-values violations over a lineitem-schema
+  * frame, as named CONDITIONAL-SUM aggregate columns, every one a
+  * commutative, combinable sum that folds map-side in one HashAggregate
+  * — and the per-relationship referential-integrity card.
   */
 object Dq {
 
@@ -31,26 +29,6 @@ object Dq {
     sum(when(col("l_returnflag").isNull ||
       !col("l_returnflag").isin("A", "N", "R"), 1L).otherwise(0L))
       .as("n_bad_returnflag"))
-
-  /** [[checkAggs]] plus the referential-integrity counter, computed off
-    * a stream-static (or batch) LEFT OUTER probe against the orders
-    * dimension — a row whose `o_orderkey` came back null is an orphan.
-    * Works identically on a streaming `rows` (stateless join + one
-    * global aggregation row of state) and a batch one (the spec's
-    * equivalence form).
-    */
-  def monitored(rows: DataFrame, orders: DataFrame): DataFrame = {
-    // dropDuplicates on the probe key: a dirty dimension with duplicate
-    // o_orderkey rows (the exact condition a DQ monitor exists to catch)
-    // must not multiply streamed fact rows, or every counter silently
-    // inflates — the batch gate's anti-join is immune, this probe is not.
-    val flagged = rows.join(
-      broadcast(orders.select(col("o_orderkey")).dropDuplicates("o_orderkey")),
-      rows("l_orderkey") === col("o_orderkey"), "left_outer")
-    val aggs = checkAggs :+
-      sum(when(col("o_orderkey").isNull, 1L).otherwise(0L)).as("n_orphans")
-    flagged.groupBy().agg(aggs.head, aggs.tail: _*)
-  }
 
   /** One referential-integrity card row for a child.fk → parent.pk
     * relationship: orphaned child rows/keys (FK violations) AND childless

@@ -222,18 +222,6 @@ object Dedup {
       .select(col("doc_id"), col("g.start").as("start"),
         col("g.h1").as("h1"), col("g.h2").as("h2"))
 
-  /** DISTINCT duplicated gram hashes (document frequency ≥ 2) — the
-    * build side of the streaming substring guard
-    * ([[graft.streaming.StreamingSubstringGuard]]). One combinable
-    * countDistinct aggregate; output is the duplicated-hash set only.
-    */
-  private[graft] def substringDupHashes(docsDf: org.apache.spark.sql.DataFrame,
-      n: Int): org.apache.spark.sql.DataFrame =
-    substringGrams(docsDf, n).groupBy(col("h1"), col("h2"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2)
-      .select(col("h1"), col("h2"))
-
   /** (doc_id, n_tokens, gs) base for the removal stage, checkpointed once
     * so the token ledger and the gram stream share one computation.
     */

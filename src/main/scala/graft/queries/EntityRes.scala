@@ -88,8 +88,8 @@ object EntityRes {
     *
     * Digit-suffix assumption, made SAFE rather than assumed: the
     * fixture's names all end in digits (`Customer#000000042` and its
-    * variants), but [[graft.streaming.StreamingEntityRes]] feeds
-    * arbitrary batch records through this same function. A plain CAST
+    * variants), but this function takes any records frame, and input
+    * from outside the fixture need not follow that naming. A plain CAST
     * of a non-numeric suffix yields null under Spark's non-ANSI cast
     * but RAISES in DuckDB — divergent engines outside the fixture — so
     * both sides use TRY_CAST folded to a −1 sentinel: every digitless
@@ -238,8 +238,8 @@ object EntityRes {
     scoredPairsOf(scaledKeyed(records(s, dir)))
 
   /** The same blocked scorer over ANY keyed records frame — the seam the
-    * 90k-record scale smoke and the streaming twin drive, so they
-    * exercise the identical join/scoring lineage the oracle gates.
+    * 90k-record scale smoke drives, so it exercises the identical
+    * join/scoring lineage the oracle gates.
     */
   private[graft] def scoredPairsOf(k: DataFrame): DataFrame = {
     val s = k.sparkSession

@@ -120,10 +120,8 @@ object MultimodalQ {
       .agg(count(lit(1)).as("n_assets"), min(col("asset_id")).as("canonical_id"))
       .filter(col("n_assets") >= 2)
 
-  /** The 4 (blk, bv) block structs of a dhash column — ONE definition
-    * shared by the batch near-dup query and the streaming asset-dedup
-    * index ([[graft.streaming.StreamingAssetDedup]]), so the online and
-    * offline bucket layouts cannot drift.
+  /** The 4 (blk, bv) block structs of a dhash column — the bucket
+    * layout of the dhash near-dup pair lineage below.
     */
   private[graft] def dhashBlockStructs(h: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
@@ -1135,17 +1133,15 @@ object MultimodalQ {
 
   /** Frame-sequence alignment near-dup over [[videoFrames]] — the Spark
     * lineage mm_video_neardup registers (its scaladoc above carries the
-    * design rationale). `dfCap` is parameterized so the streaming twin's
-    * spec can compare against the UNCAPPED alignment (a stream applies
-    * its cap against the index-so-far, so only the capless pair sets
-    * are slicing-independently equal).
+    * design rationale). A frame hash held by more than [[VideoDfCap]]
+    * recordings leaves the index.
     */
-  private[graft] def videoNearDup(s: SparkSession, docs: DataFrame,
-      dfCap: Long = VideoDfCap.toLong): DataFrame = {
+  private[graft] def videoNearDup(s: SparkSession, docs: DataFrame)
+      : DataFrame = {
     val fr = videoFrames(s, docs).materialize() // one fingerprint pass
     val keep = fr.groupBy(col("h"))
       .agg(countDistinct(col("rec_id")).as("df"))
-      .filter(col("df") <= dfCap)
+      .filter(col("df") <= VideoDfCap.toLong)
       .select(col("h"))
     val idx = fr.join(keep, Seq("h"))
     val co = idx

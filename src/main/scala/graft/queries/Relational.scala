@@ -905,8 +905,8 @@ object Relational {
         val dups = ord.groupBy(col("o_orderkey"))
           .agg(count(lit(1)).as("c")).filter(col("c") > 1)
           .agg(coalesce(sum(col("c") - 1), lit(0L)).as("n_dup_keys"))
-        // the scan-aggregate checks are ops.Dq.checkAggs — ONE kernel
-        // shared with streaming.StreamingDq's continuous monitor
+        // the scan-aggregate checks are ops.Dq.checkAggs: named,
+        // combinable conditional sums over the one lineitem scan
         val checkAggs = graft.ops.Dq.checkAggs
         val checks = li.agg(checkAggs.head, checkAggs.tail: _*)
         checks.crossJoin(broadcast(dups)).crossJoin(broadcast(orphans))

@@ -94,9 +94,9 @@ object Retrieval {
 
   /** The chunking lineage as a reusable transform over any frame with
     * (doc_id, text) — a NARROW projection (tokenize → integer chunk
-    * count → sequence explode → slice), so the SAME definition runs
-    * under Structured Streaming unchanged (streaming/StreamingChunks;
-    * StreamingChunksSpec proves stream ≡ batch row-for-row). Consumed
+    * count → sequence explode → slice): no shuffle and no state, so it
+    * runs inside the scan's tasks and each row's chunks depend on that
+    * row alone. Consumed
     * by txt_chunks with its DuckDB oracle.
     */
   private[graft] def chunkRows(d: DataFrame): DataFrame = {

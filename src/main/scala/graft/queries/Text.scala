@@ -194,12 +194,12 @@ object Text {
     Tables.sharded(s, dir, "documents")
 
   /** The calibration-card reduction over any (yy ∈ {0,1}, s_milli) frame
-    * — txt_calibration's second half, shared with the streaming monitor
-    * (streaming.StreamingCalibration): every per-bucket column is a
+    * — txt_calibration's second half. Every per-bucket column is a
     * commutative, combinable sum over the ≤100-bucket compile-time key,
-    * so the SAME definition folds identically in a batch HashAggregate
-    * and incrementally in a Structured Streaming state store (≤100 rows
-    * of state at any rate).
+    * so the card folds map-side in one HashAggregate and its exchange
+    * carries at most 100 rows per map task at any input size; the
+    * integer `div` columns keep it bit-equal to the DuckDB oracle's
+    * mirror.
     */
   private[graft] def calibrationOf(scored: DataFrame): DataFrame =
     scored

@@ -240,9 +240,9 @@ object Web {
 
   /** The frontier's per-host reduction over any warc-schema frame —
     * every column a commutative, combinable aggregate over the host
-    * key, so the SAME definition folds identically in the batch card
-    * (web_host_frontier) and incrementally under Structured Streaming
-    * (streaming.StreamingFrontier: ≤|hosts| rows of state at any rate).
+    * key, so web_host_frontier's card folds map-side and its exchange
+    * carries at most one row per host per map task, at any corpus size
+    * (≤|hosts| rows after the partial aggregate).
     * Host parses from the WARC header's uri; payload never touched.
     */
   private[graft] def hostAgg(records: DataFrame): DataFrame =

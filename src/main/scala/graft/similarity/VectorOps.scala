@@ -53,10 +53,10 @@ object VectorOps {
   /** [[cosine]] for centroid ASSIGNMENT: a zero-norm side (n2 = 0) scores
     * -∞ instead of NaN, so a degenerate (all-zero) vector or centroid
     * loses to every real one and the (cos desc, id asc) tie-break
-    * resolves identically in the batch `row_number` form and the
-    * streaming struct-min form. Unguarded, the two DIVERGE on NaN: Spark
-    * sorts NaN largest, so a NaN-cosine centroid wins a `ccos DESC`
-    * row_number but loses an `array_min(struct(negcos, cid))`.
+    * resolves by centroid id. Unguarded, Spark sorts NaN largest, so an
+    * all-zero centroid (NaN cosine to every vector) would win each
+    * vector's `ccos DESC` row_number and pull the whole index into its
+    * bucket.
     */
   def cosineAssign(dotCol: Column, na: Column, nb: Column): Column =
     when(na === 0 || nb === 0, lit(Double.NegativeInfinity))

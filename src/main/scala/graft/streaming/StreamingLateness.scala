@@ -33,7 +33,7 @@ object StreamingLateness {
     * the held watermark is NOT advanced — call [[advance]] only after the
     * sink write commits, so an at-least-once `foreachBatch` RETRY of the
     * same batch re-scores against the same pre-batch watermark instead of
-    * scoring rows late against themselves (the StreamingAssetDedup
+    * scoring rows late against themselves (the usual foreachBatch
     * persist-then-commit idempotence discipline).
     */
   def scoreBatch(batch: DataFrame, wm: AtomicLong): DataFrame = {

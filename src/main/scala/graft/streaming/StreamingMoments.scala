@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * pre-aggregated daily sketch table rolls up to any coarser grain
   * without touching raw data). The quantile fold is model-sized and runs
   * batch-side (foreachBatch / on the sketch sink read-back), the same
-  * two-level pattern as StreamingHll.
+  * two-level pattern as the `functions.Hll` register sketches.
   *
   * Determinism discipline (shared with the oracle): values pre-scaled by
   * 2⁹ (exact binary scale), per-row terms rounded to a 1e-12 fixed-point

@@ -49,28 +49,6 @@ object TextOps {
             .cast("binary")).as("h"))))
       .otherwise(array().cast("array<struct<start:bigint,h:string>>"))
 
-  /** [[posGramHashes]] with a RESULT-INVISIBLE 64-bit hash — for
-    * PROBABILISTIC consumers (the streaming substring guard's Bloom
-    * probe, where a collision is one more false positive inside the
-    * filter's own FP budget and flagged docs fall through to the exact
-    * batch join). Multi-arg xxhash64 over the n token elements: no gram
-    * STRING is ever materialized (md5(concat_ws) builds a ~n·6-char
-    * string per position first) — the running hash is seed-chained
-    * through the arguments, so token-boundary ambiguity ("ab","c" vs
-    * "a","bc") collides only with overwhelming improbability, not
-    * never — and the key is 8 bytes on the wire instead of 32 chars.
-    * Keep [[posGramHashes]] (md5) where the hash VALUE is
-    * selection-visible (winnowing's window-min fingerprints), and
-    * [[posGramHashes128]] where a collision would DESTROY data.
-    */
-  def posGramHashes64(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)), i =>
-        struct(i.cast("long").as("start"),
-          xxhash64((0 until n).map(k => element_at(toks, i + lit(k))): _*)
-            .as("h"))))
-      .otherwise(array().cast("array<struct<start:bigint,h:bigint>>"))
-
   /** 128-bit positional gram keys — two independently-seeded xxhash64
     * columns — for the DESTRUCTIVE substring-dedup paths, where a
     * colliding gram key marks a never-duplicated gram as df ≥ 2 and
@@ -126,8 +104,7 @@ object TextOps {
   }
 
   /** LSH band hash over `rowsPerBand` consecutive MinHash components
-    * (component columns named `<prefix>0..` — "mh" for the batch
-    * signature table, "__mh" for the streaming per-row form).
+    * (the signature table's component columns `mh0..`).
     *
     * RESULT-INVISIBLE hash (the q27 discipline): bh is a pure
     * compaction of the band's component tuple into one bucket key —
@@ -138,9 +115,9 @@ object TextOps {
     * crypto digest, an 8-byte shuffle key instead of a 32-char string);
     * the DuckDB oracle keeps its md5 bh — both group ≡ the tuple.
     */
-  def bandHash(band: Int, rowsPerBand: Int, prefix: String = "mh"): Column =
+  def bandHash(band: Int, rowsPerBand: Int): Column =
     xxhash64((0 until rowsPerBand)
-      .map(j => col(s"$prefix${band * rowsPerBand + j}")): _*)
+      .map(j => col(s"mh${band * rowsPerBand + j}")): _*)
 
   /** documents(doc_id, text) → exploded (doc_id, shingle) pairs.
     *

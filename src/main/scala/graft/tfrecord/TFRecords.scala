@@ -62,9 +62,9 @@ object TFRecords {
     *
     * Delivery is at-least-once: a batch replayed after a crash between
     * the file commit and the checkpoint write appends again (the classic
-    * non-transactional file-sink caveat — downstream exact dedup, e.g.
-    * StreamingDedup upstream or dd_exact over the output, restores
-    * effective exactly-once).
+    * non-transactional file-sink caveat — exact dedup downstream, e.g.
+    * dd_exact's lineage over the output, restores effective
+    * exactly-once).
     */
   def writeStream(samples: DataFrame, outputDir: String, numShards: Int,
       checkpointDir: String, seed: Long = 42L,

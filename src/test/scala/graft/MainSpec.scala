@@ -171,5 +171,12 @@ class MainSpec extends SparkSpec {
         assert(e.getMessage.contains(flag), e.getMessage)
       }
     }
+    // a non-numeric or overflowing value names its flag as well
+    for ((flag, v) <- Seq("--num_shards" -> "4x",
+        "--batch_size" -> "3000000000", "--seed" -> "x")) {
+      val e = intercept[IllegalArgumentException](
+        Main.parseArgs(Array(flag, v)))
+      assert(e.getMessage.contains(flag), e.getMessage)
+    }
   }
 }

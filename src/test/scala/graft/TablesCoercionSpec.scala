@@ -72,4 +72,12 @@ class TablesCoercionSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException](Tables(spark, dir2, "part"))
     assert(e2.getMessage.contains("part.p_retailprice"))
   }
+
+  test("sharded refuses a table with no spread key, naming it") {
+    // only documents and embeddings are sharded; every other table is
+    // read through apply, so a sharded call on one is a caller error
+    val e = intercept[IllegalArgumentException](
+      Tables.sharded(spark, sfDir, "customer"))
+    assert(e.getMessage.contains("customer"))
+  }
 }

@@ -33,6 +33,16 @@ class EntityResSpec extends SparkSpec {
     assert(card._1 < n * (n - 1) / 2)
   }
 
+  test("keyed: a digitless name falls into its nation's -1 block, not null") {
+    // outside input need not end in digits; TRY_CAST keeps Spark's bk
+    // equal to DuckDB's (where a plain CAST of "rp" raises)
+    val bk = Seq((1L, "Acme Corp", 7L), (2L, "Customer#000000042", 7L))
+      .toDF("rec_id", "name", "c_nationkey")
+    val got = EntityRes.keyed(bk).select(col("rec_id"), col("bk"))
+      .as[(Long, Long)].collect().toMap
+    assert(got === Map(1L -> 699L, 2L -> 742L))
+  }
+
   test("er_match's counts equal a first-principles recompute") {
     val recs = EntityRes.keyed(EntityRes.records(spark, sfDir))
       .select(col("rec_id"), col("bk"), col("norm"))

@@ -60,4 +60,22 @@ class VectorOpsSpec extends SparkSpec {
     // the classic ANN recall trade-off the brute-force baseline catches
     assert(out.map(_._2).sorted.toSeq === Seq(1L, 2L))
   }
+
+  test("assignIvf: a zero-norm side scores -inf, never NaN") {
+    // centroids are vec_id % 5 == 0: ids 0 and 5 (2-D for readability)
+    def assign(emb: Seq[(Long, Seq[Float])]): Map[Long, Long] =
+      VectorOps.assignIvf(emb.toDF("vec_id", "embedding"), 5)
+        .select(col("vec_id"), col("centroid_id")).as[(Long, Long)]
+        .collect().toMap
+    val real = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.9f, 0.1f)),
+      (2L, Seq(0.8f, 0.3f)), (5L, Seq(0.0f, 1.0f)), (6L, Seq(0.1f, 0.9f)))
+    // a zero VECTOR ties at -inf against every centroid and falls
+    // through to the centroid_id-asc tie-break
+    assert(assign(real :+ (7L -> Seq(0.0f, 0.0f)))(7L) === 0L)
+    // a zero CENTROID loses to every real one; unguarded, its NaN
+    // cosine would sort first under `ccos DESC` and take every vector
+    val zeroCentroid = assign(Seq((0L, Seq(0.0f, 0.0f)),
+      (1L, Seq(0.9f, 0.1f)), (5L, Seq(0.0f, 1.0f))))
+    assert(zeroCentroid === Map(0L -> 0L, 1L -> 5L, 5L -> 5L))
+  }
 }

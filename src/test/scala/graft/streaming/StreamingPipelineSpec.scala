@@ -69,77 +69,4 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(mustHave.subsetOf(streamed))
     frames.unpersist()
   }
-
-  test("doc stream → StreamingIndexDedup → windowed agg → TFRecord sink " +
-      "≡ batch") {
-    // the composed TEXT pipeline as ONE streaming job: ingest documents,
-    // drop near-dups of the already-indexed corpus (stateless stream-
-    // static anti-joins), aggregate admissions per (1s window, lang),
-    // append finalized windows to the TFRecord sink — then assert the
-    // read-back equals the identical lineage run in batch.
-    val (n, k, rpb) = (3, 12, 3)
-    val docs = graft.Tables.sharded(spark, "/root/testdata/sf0.001",
-        "documents")
-      // synthetic arrival time: one doc per 100 ms, windows of 10 docs
-      .withColumn("ts", timestamp_millis(col("doc_id") * 100))
-    val indexDocs = docs.filter(col("doc_id") % 10 < 8)
-    val deltaDocs = docs.filter(col("doc_id") % 10 >= 8).cache()
-    val index = graft.text.TextOps.bandedRows(
-      graft.text.TextOps.minhashSignatures(indexDocs, n, k), k, rpb)
-      .localCheckpoint()
-
-    val inDir = Files.createTempDirectory("sd_in").toString
-    val outDir = Files.createTempDirectory("sd_out").toString
-    val ckpt = Files.createTempDirectory("sd_ckpt").toString
-    // two chunks split mid-stream so windows span micro-batches
-    val mid = 25000L
-    deltaDocs.filter(col("doc_id") * 100 <= mid)
-      .coalesce(1).write.parquet(s"$inDir/b0")
-    deltaDocs.filter(col("doc_id") * 100 > mid)
-      .coalesce(1).write.parquet(s"$inDir/b1")
-
-    def aggregate(admitted: org.apache.spark.sql.DataFrame) = admitted
-      .groupBy(window(col("ts"), "1 second"), col("lang").as("dataset"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-        sort_array(collect_list(col("doc_id"))).as("doc_ids"))
-      .select(unix_millis(col("window.start")).as("window_start"),
-        unix_millis(col("window.end")).as("window_end"),
-        col("dataset"), col("n_docs"), col("sum_chars"), col("doc_ids"))
-
-    val stream = spark.readStream.schema(deltaDocs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*")
-    val admittedStream = StreamingIndexDedup.novel(stream, index, n, k, rpb)
-      .withWatermark("ts", "0 seconds")
-    val q = TFRecords.writeStream(aggregate(admittedStream), outDir,
-      numShards = 2, ckpt).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val readSchema = StructType(Seq(
-      StructField("window_start", LongType),
-      StructField("window_end", LongType),
-      StructField("dataset", StringType),
-      StructField("n_docs", LongType),
-      StructField("sum_chars", LongType),
-      StructField("doc_ids", ArrayType(LongType))))
-    def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(to_json(struct(readSchema.fieldNames.map(col): _*)).as("js"))
-        .as[String].collect().toSet
-
-    val streamed = canon(TFRecords.read(spark, outDir, readSchema))
-    // batch equivalence: novel() is pure column ops + anti-joins, so the
-    // same function IS the batch lineage when fed a batch frame
-    val batchAgg = aggregate(
-      StreamingIndexDedup.novel(deltaDocs, index, n, k, rpb)).cache()
-    val batch = canon(batchAgg)
-
-    assert(streamed.nonEmpty)
-    assert(streamed.subsetOf(batch),
-      s"streaming emitted non-batch rows: ${streamed.diff(batch).take(1)}")
-    // every window the first chunk's watermark closed must be present
-    val mustHave = canon(batchAgg.filter(col("window_end") <= mid))
-    assert(mustHave.subsetOf(streamed),
-      s"missing closed windows: ${mustHave.diff(streamed).take(1)}")
-    batchAgg.unpersist()
-    deltaDocs.unpersist()
-  }
 }
