@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -43,7 +44,8 @@ object Verify {
       }
     }
     new java.io.File(outDir).mkdirs()
-    // dev affordance (mirrors Bench): SPARK_GRAFT_ONLY=a,b dumps a subset
+    // dev affordance: SPARK_GRAFT_ONLY=a,b dumps a subset, as it benches
+    // one in Bench
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
@@ -70,24 +72,14 @@ object Verify {
         Files.writeString(d.resolve("_ERROR.txt"), msg)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
+    // Jackson escapes every control char, so a tab or CR in the oracle SQL
+    // cannot break a json.load of either file; _errors.json keeps the
+    // order in which the queries failed.
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.writeValueAsString(SparkEntry.oracleSql.asJava))
+    Files.writeString(Paths.get(s"$outDir/_errors.json"),
+      json.writeValueAsString(errors.asJava))
     spark.stop()
     // Exit 0 even on per-query failures: the marker dirs carry the red
     // signal per query, and a nonzero exit could cost the WHOLE compare

@@ -7,12 +7,12 @@ import org.apache.spark.sql.expressions.Aggregator
   * bounded id space of `words × 64` — the EXACT member of the sketch
   * family (KMV/HLL estimate cardinality, Bloom tests membership with
   * false positives; a bitmap is precise on all three and additionally
-  * supports SET ALGEBRA on the finished values). This is the
+  * supports set intersection on the finished values). This is the
   * Druid/ClickHouse `groupBitmap` pattern: build one bitmap per group in
   * a single combinable aggregation — merge is bitwise OR (commutative,
   * associative, idempotent, so duplicates cost nothing and no upstream
   * DISTINCT pass is needed) — then answer intersection questions
-  * (retention, overlap, churn) with bitwise AND/ANDNOT over the
+  * (retention, overlap) with a bitwise AND over the
   * model-sized bitmap table instead of re-joining the corpus per
   * question.
   *
@@ -69,22 +69,4 @@ object BitmapSketch {
 
   /** Set intersection of two equally-sized bitmap columns. */
   def and(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x.bitwiseAND(y))
-
-  /** Set union. */
-  def or(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x.bitwiseOR(y))
-
-  /** Set difference a \ b. */
-  def andNot(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => x.bitwiseAND(y.bitwiseXOR(lit(-1L))))
-
-  /** Membership test of `id` against a finished bitmap column — pure bit
-    * arithmetic per row (the BloomSketch.mightContain shape, but exact).
-    * Lets a bitmap ship as a broadcast/literal column and filter
-    * executor-side, e.g. a first-seen check against a prior bitmap.
-    */
-  def contains(bitmap: Column, id: Column): Column = {
-    val word = element_at(bitmap, shiftright(id, 6).cast("int") + lit(1))
-    call_function("shiftright", word, id.bitwiseAND(lit(63L)).cast("int"))
-      .bitwiseAND(lit(1L)) === lit(1L)
-  }
 }

@@ -92,14 +92,12 @@ object Retrieval {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.sharded(s, dir, "documents")
 
-  /** The chunking lineage as a reusable transform over any frame with
-    * (doc_id, text) — a NARROW projection (tokenize → integer chunk
-    * count → sequence explode → slice): no shuffle and no state, so it
-    * runs inside the scan's tasks and each row's chunks depend on that
-    * row alone. Consumed
-    * by txt_chunks with its DuckDB oracle.
+  /** txt_chunks' chunking lineage over (doc_id, text) — a NARROW
+    * projection (tokenize → integer chunk count → sequence explode →
+    * slice): no shuffle and no state, so it runs inside the scan's tasks
+    * and each row's chunks depend on that row alone.
     */
-  private[graft] def chunkRows(d: DataFrame): DataFrame = {
+  private def chunkRows(d: DataFrame): DataFrame = {
     val (c, st) = (ChunkTokens, ChunkStride)
     d.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .withColumn("n_toks", size(col("toks")).cast("long"))

@@ -193,15 +193,15 @@ object Text {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.sharded(s, dir, "documents")
 
-  /** The calibration-card reduction over any (yy ∈ {0,1}, s_milli) frame
-    * — txt_calibration's second half. Every per-bucket column is a
+  /** txt_calibration's second half: the calibration card over its
+    * (yy ∈ {0,1}, s_milli) scores. Every per-bucket column is a
     * commutative, combinable sum over the ≤100-bucket compile-time key,
     * so the card folds map-side in one HashAggregate and its exchange
     * carries at most 100 rows per map task at any input size; the
     * integer `div` columns keep it bit-equal to the DuckDB oracle's
     * mirror.
     */
-  private[graft] def calibrationOf(scored: DataFrame): DataFrame =
+  private def calibrationOf(scored: DataFrame): DataFrame =
     scored
       .select(col("yy"), col("s_milli"),
         least(expr("s_milli div 10"), lit(99L)).as("bucket"))

@@ -238,14 +238,14 @@ object Web {
       http: Boolean = false): DataFrame =
     s.read.format("warc").load(writeCorpus(s, dir, http))
 
-  /** The frontier's per-host reduction over any warc-schema frame —
+  /** web_host_frontier's per-host reduction over the warc records —
     * every column a commutative, combinable aggregate over the host
-    * key, so web_host_frontier's card folds map-side and its exchange
+    * key, so the card folds map-side and its exchange
     * carries at most one row per host per map task, at any corpus size
     * (≤|hosts| rows after the partial aggregate).
     * Host parses from the WARC header's uri; payload never touched.
     */
-  private[graft] def hostAgg(records: DataFrame): DataFrame =
+  private def hostAgg(records: DataFrame): DataFrame =
     records
       .filter(col("warc_type") === "resource")
       .select(
